@@ -54,7 +54,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lenses_topology_example_spark import catalog
-from lenses_topology_example_spark.session import DEFAULT_SF_DIR, get_spark
+from lenses_topology_example_spark.session import DEFAULT_SF_DIR, cpu_count, get_spark
 
 # Headline set: every tier represented — flagship pipeline, heavy aggs +
 # joins, windows, dedup (exact/minhash/jaccard), similarity (exact + LSH),
@@ -675,7 +675,7 @@ def main() -> None:
         "load_gate": gate,
     }
     print(json.dumps(full))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpu_count()
     try:
         # core runs persist to their OWN file: a --headline-core
         # iteration must never clobber the committed full-suite

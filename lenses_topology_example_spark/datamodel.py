@@ -68,10 +68,13 @@ CORPUS_LINES = (
 def currency_rates_df(spark: SparkSession) -> DataFrame:
     """The 5-row FX dimension as a DataFrame.
 
-    Always joined with an explicit ``F.broadcast`` hint — this is the
-    Spark-native form of the reference's in-process hash-map lookup
-    (CurrencyExchangeRepo.java:22-24): replicate the dim to every
-    executor, zero shuffle on the fact side.
+    The batch catalog entries join it with an explicit ``F.broadcast``
+    hint — the Spark-native form of the reference's in-process hash-map
+    lookup (CurrencyExchangeRepo.java:22-24): replicate the dim to every
+    executor once per query, zero shuffle on the fact side. The streaming
+    twin (streaming/pipelines.convert_payments) does not broadcast it: it
+    collects the 5 rows once at plan build time and folds them into the
+    plan as a literal map, so no micro-batch re-broadcasts the dim.
 
     ``rate`` is carried as double: the payments fact keeps amounts in
     double through scalar arithmetic (bit-identical across engines) and

@@ -15,7 +15,10 @@ Spark design:
 - unknown currency: the reference would NPE (PaymentsService.java:101-102);
   we define inner-join-drop (documented deviation, SURVEY.md §1.2).
 - the two-output fan-out becomes two filters over one cached lineage (or
-  one pass via foreachBatch in the streaming twin — streaming/pipelines.py).
+  one pass via foreachBatch in the streaming twin — streaming/pipelines.py,
+  which folds the constant dimension into its plan as a literal map
+  instead of broadcasting it in every micro-batch, and writes both sinks
+  concurrently).
 
 Scale notes (100 TB): the only shuffle in the whole pipeline is the final
 groupBy(currency); with 5 distinct keys Spark's partial aggregation

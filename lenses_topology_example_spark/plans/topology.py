@@ -120,12 +120,22 @@ def node_types_of(df: DataFrame) -> list[str]:
     return [n["type"] for n in topology_of(df)["nodes"]]
 
 
+# lastProgress.durationMs phases a metrics sample keeps (ms each)
+PROGRESS_PHASES = (
+    "addBatch", "getBatch", "queryPlanning", "walCommit", "triggerExecution",
+)
+
+
 def progress_metrics(query: StreamingQuery) -> dict[str, Any] | None:
     """One metrics sample from lastProgress — the Spark-native content of
-    the reference's `__topology__metrics` messages."""
+    the reference's `__topology__metrics` messages — with the micro-batch's
+    phase times (``durationMs``, the PROGRESS_PHASES a trigger reported)
+    and, per stateful operator, its state-store size (``numRowsTotal``,
+    ``memoryUsedBytes``)."""
     p = query.lastProgress
     if p is None:
         return None
+    phases = p.get("durationMs") or {}
     return {
         "appName": query.name,
         "queryId": str(query.id),
@@ -134,6 +144,14 @@ def progress_metrics(query: StreamingQuery) -> dict[str, Any] | None:
         "inputRowsPerSecond": p.get("inputRowsPerSecond"),
         "processedRowsPerSecond": p.get("processedRowsPerSecond"),
         "timestamp": p.get("timestamp"),
+        "durationMs": {k: phases[k] for k in PROGRESS_PHASES if k in phases},
+        "stateOperators": [
+            {
+                "numRowsTotal": op.get("numRowsTotal"),
+                "memoryUsedBytes": op.get("memoryUsedBytes"),
+            }
+            for op in p.get("stateOperators") or []
+        ],
     }
 
 
@@ -211,4 +229,6 @@ def batch_metrics(obs: Any, app_name: str = "app") -> dict[str, Any]:
         "inputRowsPerSecond": None,
         "processedRowsPerSecond": None,
         "timestamp": None,
+        "durationMs": None,
+        "stateOperators": None,
     }

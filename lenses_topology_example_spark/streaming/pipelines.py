@@ -7,12 +7,17 @@ Reference mapping:
   update-mode sink; Kafka source/sink builders are provided but tests
   drive the identical plan from a file source + memory sink
   (batch-as-bounded-stream, processAllAvailable()).
-- payments pipeline (PaymentsService.java:42-71): one input stream, a
-  broadcast dim join, scalar multiply, and a 2-way predicate fan-out to
-  two sinks. The reference writes both outputs record-at-a-time in one
-  loop; the Spark-native equivalent with identical single-pass semantics
-  is foreachBatch: persist the micro-batch, write converted, write
-  suspicious — one source read per batch, exactly-once per sink via the
+- payments pipeline (PaymentsService.java:42-71): one input stream, an
+  FX lookup, scalar multiply, and a 2-way predicate fan-out to two sinks.
+  The 5-row FX dimension is constant, so it is collected once when the
+  plan is built and folded into it as a literal map — the reference's
+  in-process map (CurrencyExchangeRepo.java:22-24). A stream-static join
+  would re-plan and re-broadcast the dimension in every micro-batch; the
+  folded plan has no BroadcastExchange. The reference writes both
+  outputs record-at-a-time in one loop; the Spark-native equivalent with
+  identical single-pass semantics is foreachBatch: persist the
+  micro-batch, write converted and suspicious concurrently — one source
+  read and 2 Spark jobs per batch, exactly-once per sink via the
   checkpoint (an upgrade over the reference's at-least-once, SURVEY.md
   §3.3).
 - delivery cadence: the reference flushes per poll-batch
@@ -26,6 +31,7 @@ switch the state store to RocksDB
 
 from __future__ import annotations
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -124,9 +130,28 @@ def start_wordcount_to_kafka(
 
 
 def convert_payments(payments: DataFrame, rates: DataFrame) -> DataFrame:
-    """stream-static broadcast join + scalar multiply (J1 + P4)."""
-    return payments.join(F.broadcast(rates), "currency", "inner").withColumn(
-        "amount_xchg", F.col("amount") * F.col("rate")
+    """FX lookup + scalar multiply (J1 + P4) with the rates folded into
+    the plan.
+
+    ``rates`` (currency, rate) is collected once, here, at plan build
+    time — for the ``VALUES`` dimension that is a LocalTableScan
+    collect, which runs no Spark job — and looked up per row through a
+    literal ``create_map(...)[currency]``. On a stream this keeps the
+    dimension out of every micro-batch: a stream-static broadcast join
+    re-plans and re-broadcasts its static side per batch, the folded
+    plan has no BroadcastExchange at all. Semantics are the inner
+    join's: unknown currencies drop, and the columns come out as
+    ``currency, <other payment cols>, rate, amount_xchg``. ``rates``
+    must be a small dimension (it lives in the plan); the batch catalog
+    entries in operators/payments.py keep their broadcast joins, which
+    broadcast once per query."""
+    pairs = rates.select("currency", "rate").collect()
+    lookup = F.create_map(*[F.lit(v) for c, r in pairs for v in (c, r)])
+    rest = [c for c in payments.columns if c != "currency"]
+    return (
+        payments.select("currency", *rest, lookup[F.col("currency")].alias("rate"))
+        .filter(F.col("rate").isNotNull())
+        .withColumn("amount_xchg", F.col("amount") * F.col("rate"))
     )
 
 
@@ -138,7 +163,16 @@ def start_payments_fanout(
     checkpoint: str,
 ) -> StreamingQuery:
     """The §3.3 dual-sink fan-out as foreachBatch: one pass over each
-    micro-batch (persist -> write both branches -> unpersist).
+    micro-batch (persist -> write both branches concurrently ->
+    unpersist), 2 Spark jobs per batch. The FX dimension is folded into
+    the plan by convert_payments, so no batch broadcasts it.
+
+    The suspicious write runs on a ``pyspark.InheritableThread`` while
+    the callback thread writes converted. The thread inherits the
+    callback's local properties, so both jobs land in the query's job
+    group (its runId) and ``stop()`` cancels both. A failure in either
+    write fails the batch: the thread is joined, the batch unpersisted,
+    then its error re-raised.
 
     Exactly-once mechanics: each batch writes to its own
     `batch_id=<n>/` directory with mode("overwrite"). foreachBatch has
@@ -151,18 +185,30 @@ def start_payments_fanout(
     converted = convert_payments(payments, rates)
 
     def write_both(batch: DataFrame, batch_id: int) -> None:
+        errors: list[BaseException] = []
+
+        def write_suspicious() -> None:
+            try:
+                batch.filter(
+                    F.col("amount_xchg") < F.lit(float(SUSPICIOUS_THRESHOLD))
+                ).write.mode("overwrite").parquet(
+                    f"{suspicious_path}/batch_id={batch_id}"
+                )
+            except BaseException as e:  # re-raised on the callback thread
+                errors.append(e)
+
         batch.persist()
+        suspicious = InheritableThread(target=write_suspicious)
+        suspicious.start()
         try:
             batch.write.mode("overwrite").parquet(
                 f"{converted_path}/batch_id={batch_id}"
             )
-            batch.filter(
-                F.col("amount_xchg") < F.lit(float(SUSPICIOUS_THRESHOLD))
-            ).write.mode("overwrite").parquet(
-                f"{suspicious_path}/batch_id={batch_id}"
-            )
         finally:
+            suspicious.join()
             batch.unpersist()
+        if errors:
+            raise errors[0]
 
     return (
         converted.writeStream.foreachBatch(write_both)

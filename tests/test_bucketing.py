@@ -131,8 +131,11 @@ def test_multi_row_group_layout_parallelizes_scan(spark, sf_dir, tmp_path):
 
     single = load_table(spark, sf_dir, "lineitem")
     multi = load_table(spark, str(dst), "lineitem")
-    # single-file layout: splits exist but only 1 carries the row group
-    assert multi.rdd.getNumPartitions() >= 8
+    # single-file layout: splits exist but only 1 carries the row group;
+    # the 8 files pack into at most defaultParallelism scan partitions
+    assert multi.rdd.getNumPartitions() >= min(
+        8, spark.sparkContext.defaultParallelism
+    )
 
     q = _CATALOG["agg_revenue"][0]
     got_single = {tuple(r) for r in q(spark, sf_dir).collect()}

@@ -161,6 +161,8 @@ METRICS_FIELDS = {
     "inputRowsPerSecond",
     "processedRowsPerSecond",
     "timestamp",
+    "durationMs",
+    "stateOperators",
 }
 
 

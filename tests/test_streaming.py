@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import contextlib
+import io
+import os
 import re
 from collections import Counter
 
@@ -10,9 +13,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from lenses_topology_example_spark.datamodel import CORPUS_LINES
+from lenses_topology_example_spark.datamodel import CORPUS_LINES, currency_rates_df
 from lenses_topology_example_spark.sources.generator import gen_payments_df
 from lenses_topology_example_spark.streaming.pipelines import (
+    convert_payments,
     start_payments_fanout,
     start_wordcount_to_memory,
     streaming_dedup,
@@ -44,6 +48,35 @@ def test_streaming_wordcount_matches_batch(spark, tmp_path):
     assert got == dict(golden)
 
 
+def test_wordcount_sample_keeps_phases_and_state_size(spark, tmp_path):
+    """A streaming metrics sample carries the micro-batch's phase times
+    and the aggregate's state-store size, not just row counts."""
+    from lenses_topology_example_spark.plans.topology import (
+        PROGRESS_PHASES,
+        progress_metrics,
+    )
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "lines.txt").write_text("\n".join(CORPUS_LINES))
+    lines = spark.readStream.format("text").load(str(corpus))
+    q = start_wordcount_to_memory(lines, "wc_sample_test")
+    try:
+        q.processAllAvailable()
+        sample = progress_metrics(q)
+    finally:
+        q.stop()
+
+    assert sample["numInputRows"] == len(CORPUS_LINES)
+    assert set(sample["durationMs"]) == set(PROGRESS_PHASES)
+    assert all(isinstance(v, int) and v >= 0 for v in sample["durationMs"].values())
+    assert sample["durationMs"]["triggerExecution"] >= sample["durationMs"]["addBatch"]
+    vocab = {t for line in CORPUS_LINES for t in re.split(r"\W+", line.lower()) if t}
+    [state] = sample["stateOperators"]
+    assert state["numRowsTotal"] == len(vocab)
+    assert state["memoryUsedBytes"] > 0
+
+
 def test_payments_fanout_dual_sink(spark, tmp_path):
     src = tmp_path / "payments_in"
     gen_payments_df(spark, n=2000).write.parquet(str(src))
@@ -58,8 +91,16 @@ def test_payments_fanout_dual_sink(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
+        # the folded FX dimension broadcasts nothing: one job per sink,
+        # both in the query's job group (the suspicious write's thread
+        # inherits it)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     finally:
         q.stop()
+    assert len(batches) == 1
+    assert len(jobs) == 2 * len(batches), jobs
 
     converted = spark.read.parquet(conv_dir)
     suspicious = spark.read.parquet(susp_dir)
@@ -68,6 +109,64 @@ def test_payments_fanout_dual_sink(spark, tmp_path):
     n_susp_from_converted = converted.filter(F.col("amount_xchg") < 10000).count()
     assert suspicious.count() == n_susp_from_converted
     assert suspicious.filter(F.col("amount_xchg") >= 10000).count() == 0
+
+
+def test_payments_fanout_failed_sink_fails_the_query(spark, tmp_path):
+    """A failing suspicious write (raised on its own thread) ends the
+    query with that error; the batch is never committed, so a restart
+    replays it instead of leaving a silent partial batch."""
+    src = tmp_path / "payments_in"
+    gen_payments_df(spark, n=200).write.parquet(str(src))
+    stream = spark.readStream.schema(
+        "payment_id long, currency string, amount double, ts timestamp"
+    ).parquet(str(src))
+    susp_file = tmp_path / "suspicious"
+    susp_file.write_text("a regular file, not a directory")
+    ckpt = tmp_path / "ckpt"
+
+    q = start_payments_fanout(
+        stream, spark, str(tmp_path / "converted"), str(susp_file), str(ckpt)
+    )
+    try:
+        with pytest.raises(Exception) as err:
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert "suspicious" in str(err.value)
+    assert q.exception() is not None
+    assert not (ckpt / "commits").exists() or not os.listdir(ckpt / "commits")
+
+
+def test_convert_payments_folds_the_dimension(spark, tmp_path):
+    rates = currency_rates_df(spark)
+    src = tmp_path / "payments_in"
+    gen_payments_df(spark, n=100).write.parquet(str(src))
+    stream = spark.readStream.schema(
+        "payment_id long, currency string, amount double, ts timestamp"
+    ).parquet(str(src))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        convert_payments(stream, rates).explain()
+    assert "== Physical Plan ==" in buf.getvalue()
+    assert "BroadcastExchange" not in buf.getvalue()
+    assert "Join" not in buf.getvalue()
+
+    unknown = spark.createDataFrame(
+        [(10_000, "XXX", 5.0, None)],
+        "payment_id long, currency string, amount double, ts timestamp",
+    )
+    payments = gen_payments_df(spark, n=500).unionByName(unknown)
+    got = convert_payments(payments, rates)
+    # the broadcast join convert_payments replaces
+    want = payments.join(F.broadcast(rates), "currency", "inner").withColumn(
+        "amount_xchg", F.col("amount") * F.col("rate")
+    )
+    assert got.columns == want.columns == [
+        "currency", "payment_id", "amount", "ts", "rate", "amount_xchg",
+    ]
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.filter(F.col("currency") == "XXX").count() == 0
+    assert got.count() == 500
 
 
 def test_windowed_counts_watermarked(spark, tmp_path):

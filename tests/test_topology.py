@@ -193,5 +193,6 @@ def test_batch_observed_metrics_match_count(spark, sf_dir):
     stream_keys = {
         "appName", "queryId", "batchId", "numInputRows",
         "inputRowsPerSecond", "processedRowsPerSecond", "timestamp",
+        "durationMs", "stateOperators",
     }
     assert set(payload) == stream_keys

@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lenses_topology_example_spark import catalog  # noqa: E402
-from lenses_topology_example_spark.session import get_spark  # noqa: E402
+from lenses_topology_example_spark.session import cpu_count, get_spark  # noqa: E402
 
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/r18_sf1")
 DOCS10 = os.environ.get("SPARK_GRAFT_DOCS10_DIR", "/tmp/r18_docs10")
@@ -105,7 +105,7 @@ def main() -> None:
             entries = ENTRIES_DOCS100; i += 2
         else:
             raise SystemExit(f"unknown arg {args[i]}")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpu_count()
     spark = get_spark("core_scaling", driver_memory="32g")
     qs = catalog.queries()
 
