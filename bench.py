@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
-Driver heap: $SPARK_GRAFT_DRIVER_MEM (default 32g at sf<=0.5, 64g
-above — sized to the measured working set, see main()).
+Driver heap: $SPARK_GRAFT_DRIVER_MEM (default: half of MemAvailable,
+capped at 32g at sf<=0.5 and 64g above — see default_heap()).
 
 Output contract (round-8 revision — BENCH_r07 came back unparseable
 because the 103-query map on the final line overflowed the driver's
@@ -21,6 +21,9 @@ set) for fast iteration; the round's final BENCH runs the full tier.
 Each query is forced through the noop sink (full plan execution, zero
 result-materialization overhead on the driver) — the number measures the
 engine, not toPandas().
+
+Memo builds (memo.py) are timed as their own `memo:<key>` rows, not
+inside the entry that first needs them (see timed_loop()).
 
 Expected log noise: Spark prints `WindowExec: No Partition Defined ...
 may cause serious performance degradation` for every unpartitioned
@@ -53,7 +56,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from lenses_topology_example_spark import catalog
+from lenses_topology_example_spark import catalog, memo
 from lenses_topology_example_spark.session import DEFAULT_SF_DIR, cpu_count, get_spark
 
 # Headline set: every tier represented — flagship pipeline, heavy aggs +
@@ -540,9 +543,10 @@ def _load_gate() -> dict:
     under the threshold or the wait budget runs out, and record what
     happened in the output JSON so the sample's quietness is part of
     the record. Tunables: SPARK_GRAFT_LOAD_GATE (threshold, default
-    4.0 — idle-host headroom on the 32-CPU sandbox), _LOAD_WAIT_SEC
-    (budget, default 600), _LOAD_GATE=0 disables."""
-    thr = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "4.0"))
+    cores / 8 — 4.0 on a 32-core host, and below the core count on
+    any host), _LOAD_WAIT_SEC (budget, default 600), _LOAD_GATE=0
+    disables."""
+    thr = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", cpu_count() / 8))
     budget = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_SEC", "600"))
     start = _read_load1()
     waited = 0.0
@@ -563,6 +567,52 @@ def _load_gate() -> dict:
     return gate
 
 
+def default_heap(sf: float) -> str:
+    """Half of MemAvailable in whole 512 MB steps, capped at the measured
+    working set (~17 GB pre-GC at sf0.1 -> 32g; 64g above sf0.5). The
+    heap is pinned and pre-touched (session.py), so it must fit in what
+    the host has free, not what a bigger host had."""
+    with open("/proc/meminfo") as f:
+        avail_kb = next(
+            int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:")
+        )
+    cap_mb = 32768 if sf <= 0.5 else 65536
+    return f"{max(1024, min(cap_mb, avail_kb // 2048 // 512 * 512))}m"
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def timed_loop(spark, qs, names, sf_dir) -> tuple[dict[str, float], float]:
+    """Run each entry in ``names`` through the noop sink; return the
+    per-row seconds and the loop's wall time.
+
+    A memo build triggered while an entry is constructed gets its own
+    ``memo:<key>`` row, placed before the entry's row: its self time
+    (memo.py) plus the noop write that materializes a cached frame
+    (loader frames hold no data, so they are not written). The entry's
+    row is its wall time minus those rows, so every row carries only
+    its own work and the rows sum to the loop's wall time."""
+    rows: dict[str, float] = {}
+    t_loop = time.perf_counter()
+    for name in names:
+        t0 = time.perf_counter()
+        with memo.recording() as builds:
+            df = qs[name](spark, sf_dir)
+        built = 0.0
+        for key, frame, self_s in builds:
+            t1 = time.perf_counter()
+            if frame.is_cached:
+                _noop(frame)
+            rows[f"memo:{key}"] = self_s + time.perf_counter() - t1
+            built += rows[f"memo:{key}"]
+        _noop(df)
+        rows[name] = time.perf_counter() - t0 - built
+    wall = time.perf_counter() - t_loop
+    return {k: round(v, 3) for k, v in rows.items()}, round(wall, 3)
+
+
 def main() -> None:
     core = "--headline-core" in sys.argv[1:]
     names = HEADLINE_CORE if core else HEADLINE
@@ -570,20 +620,16 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     gate = _load_gate()
-    # Heap sized to the measured working set, not the host (guide §5):
-    # peak pre-GC occupancy over a full-suite GC log is ~17 GB, but an
-    # unsized 90g max heap let G1 grow/shrink committed memory all run
-    # (74.5 CPU-s of kernel time inside GC pauses, 1.0-1.6 s young
-    # evacuations of 10+ GB young gens, 169 humongous-triggered cycles).
-    # 32g bounds the young gen; session.py pins -Xms and pre-touches so
-    # commit/first-touch faults land in untimed startup.
-    # Override with SPARK_GRAFT_DRIVER_MEM (r17 ADVICE: the 32g default
-    # was sized to the ~17 GB sf0.1 working set; larger SFs scale the
-    # default up rather than OOM silently).
-    default_mem = "32g" if sf <= 0.5 else "64g"
+    # Heap sized to the measured working set: an unsized 90g
+    # max heap let G1 grow/shrink committed memory all run (74.5 CPU-s
+    # of kernel time inside GC pauses, 169 humongous-triggered cycles).
+    # session.py pins -Xms and pre-touches so commit/first-touch faults
+    # land in untimed startup; default_heap() keeps that pin inside the
+    # host's free memory. Override with SPARK_GRAFT_DRIVER_MEM.
     spark = get_spark(
         "bench",
-        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem),
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_heap(sf),
     )
 
     qs = catalog.queries()
@@ -591,70 +637,17 @@ def main() -> None:
     # Steady-state warmup (JMH-style): run the full headline once at the
     # smallest SF so every expression/codegen/shuffle path is JIT'd, then
     # time at the target SF. Cold-JVM first-touch costs (~1.5 s/query
-    # measured) are session amortization, not operator throughput.
+    # measured) are session amortization, not operator throughput. The
+    # warmup's memo entries are released after it: the timed loop builds
+    # (and times) its own at the target SF.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm_dir = sf_dir.replace("sf0.1", "sf0.001")
     if warm_dir != sf_dir and os.path.isdir(warm_dir):
         for name in names:
-            qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+            _noop(qs[name](spark, warm_dir))
+        memo.drop(spark, warm_dir)
 
-    # Memo warmup at the TARGET SF (r10 VERDICT ask #4): the dedup
-    # family's dominant in-suite variance is the one-time shared
-    # seg/canon/cluster-label memo builds paid inside the first timed
-    # execution (dedup_lines_near_capped read 70 s in a noisy driver
-    # sample vs its 4.6 s steady-state anchor). Materialize those memos
-    # once, untimed, so every timed reading is the steady-state plan
-    # cost the anchors record. The three below build every memo the
-    # family shares (seg/block, canon, pair/cluster-label).
-    MEMO_WARM = (
-        "dedup_lines_near_capped",
-        "dedup_lines_rebuild",
-        "dedup_keeper_quality",
-        # r17 VERDICT ask #1: the round-17 shared memos (emb_base,
-        # bm25_topk + sem_topk, jaccard_pairs, basket_pair_support,
-        # embed_cluster_labels) were built inside whichever timed entry
-        # executed first, distorting per-query attribution (hybrid_rrf
-        # read 10.6 s in-suite vs 3.6 s steady). The five entries below
-        # build exactly those memos untimed, same as the dedup trio
-        # above — the build cost is still paid and visible in wall
-        # clock, just not charged to an arbitrary query.
-        "sim_topk",  # emb_base
-        "hybrid_rrf",  # bm25_topk + sem_topk ranking legs
-        "dedup_near_jaccard",  # jaccard_pairs
-        "basket_lift",  # basket_pair_support
-        "embed_dedup_cluster",  # pair graph + embed_cluster_labels
-        # r18: the two shared memos the r17 extension missed.
-        # containment_pairs feeds dedup_containment + cross_source_leak
-        # + source_pagerank, and in bench order cross_source_leak runs
-        # FIRST, so the capped-shingle self-join build was charged to
-        # it (r17 quiet 2.74 s vs ~1.0 s steady). The tfidf weighted
-        # index is dedup_tfidf_cosine's own single-consumer memo — the
-        # one entry whose r17 quiet reading exceeded the host factor
-        # (5.02 s = 3.4x anchor) precisely because its first timed
-        # execution carried the build; the build itself was also
-        # restructured this round (window df, dedup.py).
-        "dedup_containment",  # containment_pairs
-        "dedup_tfidf_cosine",  # tfidf_cos_weighted_index
-        # r18 session 2: events_nonnull_values feeds histogram_quantiles
-        # (bench order first) + mad_outliers; the first timed execution
-        # carried the events scan+persist (quiet 1.38-1.57 s vs 0.838
-        # anchor; mad_outliers sat at 1.07 ~ its 1.064 anchor).
-        "histogram_quantiles",  # events_nonnull_values
-    )
-    for name in MEMO_WARM:
-        if name in names:
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-
-    timings: dict[str, float] = {}
-    t_suite = time.perf_counter()
-    for name in names:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
-    total = round(time.perf_counter() - t_suite, 3)
+    timings, total = timed_loop(spark, qs, names, sf_dir)
 
     # Full per-query map: emitted EARLY (not last) and persisted next to
     # this script — BENCH_r07 came back `"parsed": null` because the

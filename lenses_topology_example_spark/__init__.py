@@ -13,6 +13,7 @@ strategy.
 Layout:
     session.py    SparkSession factory tuned for local[N] test + cluster scale
     tables.py     parquet table loaders for the driver testdata
+    memo.py       the session-scoped cache of loaded and derived frames
     datamodel.py  schemas + static fixtures (FX rates, word-count corpus)
     operators/    batch operators (payments, wordcount, relational, dedup, …)
     sources/      generators and connectors (synthetic payments, kafka)

@@ -42,12 +42,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # (tests/conftest.py::catalog_dfs). Concretely: no spark.conf.set, no
 # setLocalProperty, no unguarded eager materialization inside a
 # (spark, sf_dir) -> DataFrame callable. Entries that MUST materialize
-# at build time guard with their own lock (dedup._MATERIALIZED_LOCK)
-# or are excluded by documented exception (sink_parquet). Session
-# confs the semantics rely on go through conf.ensure_runtime_confs
-# (idempotent set-if-different at the CONTRACT entry points, not per
-# builder); the conftest fixture snapshots the critical confs around
-# the threaded build and fails the run if a builder left them changed.
+# at build time do so inside a memo.cached thunk (built once per key,
+# under the key's lock) or are excluded by documented exception
+# (sink_parquet). Session confs the semantics rely on go through
+# conf.ensure_runtime_confs (idempotent set-if-different at the
+# CONTRACT entry points, not per builder); the conftest fixture
+# snapshots the critical confs around the threaded build and fails the
+# run if a builder left them changed.
 #
 # The round driver evaluates only the FIRST 50 entries for its
 # CORRECTNESS report (round-1 finding — the whole training-data tier

@@ -25,6 +25,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..memo import cached
 from ..tables import load_table
 from .relational import dsum2_sql, dsum_sql
 from .similarity import as_double, dot, sql_dot
@@ -989,7 +990,6 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.2M-pair support join recomputed six times to re-derive a ~3.6k-
     row frame. Materializing it once is the write-once edge-list table
     any production triangle count reads."""
-    from .dedup import _memo_persist
     from .relational2 import basket_pair_support
 
     # round 17: the Σ_orders k²/2 pair self-join + support aggregation
@@ -997,13 +997,14 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_basket_lift — r15 ADVICE: a single construction site so the two
     # consumers cannot drift); the pruned edge list is still its own
     # memo because SIX consumers below read it
-    edges = _memo_persist(
+    edges = cached(
         spark,
         sf_dir,
         "copurchase_edges",
         lambda: basket_pair_support(spark, sf_dir)
         .filter(F.col("support") >= F.lit(TRI_MIN_SUPPORT))
-        .select("pa", "pb"),
+        .select("pa", "pb")
+        .persist(),
     )
     deg = (
         edges.select(F.col("pa").alias("node"))

@@ -22,9 +22,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import threading
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.texthash import (
@@ -35,6 +32,7 @@ from ..functions.texthash import (
     minhash_component,
     sql_minhash_component,
 )
+from ..memo import cached
 from ..tables import load_table
 from .wordcount import tokens_col
 
@@ -95,75 +93,6 @@ SQL_SHINGLES = r"""
 SQL_TOKS = r"list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')"
 
 
-# Memoized materialized intermediates, keyed by (applicationId, sf_dir,
-# table). persist() on a FRESH frame per call would leak cached blocks in
-# a long-lived embedding session (every invocation stacks a new copy);
-# memoization both fixes the leak and lets jaccard/minhash/simhash share
-# one token table. Lock: two threads racing the first call would both
-# persist and leak the loser's copy. RLock, not Lock: a memo build may
-# itself consult other memoized builders (seg_token_sets reads
-# line_segments, shingles reads tokens), so thunk construction inside
-# the critical section re-enters from the same thread.
-_MATERIALIZED: dict[tuple[str, str, str], DataFrame] = {}
-_MATERIALIZED_LOCK = threading.RLock()
-
-
-def _memo_persist(
-    spark: SparkSession,
-    sf_dir: str,
-    key: str,
-    df: DataFrame | Callable[[], DataFrame],
-) -> DataFrame:
-    """``df`` is a DataFrame or (preferred) a ZERO-ARG CALLABLE building
-    one. Prefer the callable: PySpark analyzes eagerly, so constructing
-    a memo frame's full build tree costs 47-236 ms of driver-side
-    Catalyst work per call at sf0.1 (measured r18) — paid by EVERY
-    consumer on a memo HIT just to discard the frame. A thunk defers
-    construction to the one call that actually misses."""
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir, key)
-    with _MATERIALIZED_LOCK:
-        # Evict entries from STOPPED sessions only: a long-lived
-        # embedding process that restarts SparkSessions would otherwise
-        # accumulate dead DataFrame references forever, but two
-        # concurrently live sessions in one process must not thrash each
-        # other's memo (eviction keyed on "differs from current app"
-        # would re-persist the victim's frames unboundedly).
-        for k in [k for k in _MATERIALIZED if k[0] != app_id]:
-            cached = _MATERIALIZED[k]
-            # Only evict a session that is DEMONSTRABLY stopped: either
-            # the gateway handle is gone (classic stop signature) or the
-            # JVM says so. A probe failure of unknown cause (e.g. Spark
-            # Connect, where _jsc never exists) keeps the entry —
-            # leak-on-doubt beats unpersisting a live foreign session's
-            # frame and reintroducing cross-session thrash (r3 ADVICE).
-            try:
-                jsc = cached.sparkSession.sparkContext._jsc
-                stopped = jsc is None or jsc.sc().isStopped()
-            except Exception:
-                stopped = False
-            if stopped:
-                try:
-                    cached.unpersist()
-                except Exception:
-                    pass
-                del _MATERIALIZED[k]
-        if memo_key not in _MATERIALIZED:
-            frame = df() if callable(df) else df
-            _MATERIALIZED[memo_key] = frame.persist()
-        return _MATERIALIZED[memo_key]
-
-
-def _memo_get(spark: SparkSession, sf_dir: str, key: str) -> DataFrame | None:
-    """Memo lookup WITHOUT construction — for EAGER frames (the cluster
-    fixpoint), whose cost is paid when the DataFrame is BUILT, so the
-    usual construct-then-_memo_persist pattern would re-run the jobs on
-    every memo hit."""
-    app_id = spark.sparkContext.applicationId
-    with _MATERIALIZED_LOCK:
-        return _MATERIALIZED.get((app_id, sf_dir, key))
-
-
 def _parallel_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Degenerate-layout guard for expensive derivation stages.
 
@@ -204,9 +133,9 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _parallel_scan(spark, load_table(spark, sf_dir, "documents"))
         return docs.select(
             "doc_id", "source", tokens_col(F.col("text")).alias("t")
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "tokens", build)
+    return cached(spark, sf_dir, "tokens", build)
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,9 +149,9 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.array_distinct(shingles_col(F.col("t")))).alias(
                 "shingle"
             ),
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "shingles", build)
+    return cached(spark, sf_dir, "shingles", build)
 
 
 # --- n-gram Jaccard near-dup ----------------------------------------------------
@@ -272,9 +201,9 @@ def jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(nb, "doc_b")
             .withColumn("jaccard", jac)
             .select("doc_a", "doc_b", "jaccard")
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "jaccard_pairs_all", build)
+    return cached(spark, sf_dir, "jaccard_pairs_all", build)
 
 
 def q_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,9 +249,9 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = _doc_shingles(spark, sf_dir)
         freq = s.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         rare = freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle")
-        return s.join(rare, "shingle", "left_semi")
+        return s.join(rare, "shingle", "left_semi").persist()
 
-    return _memo_persist(spark, sf_dir, "shingles_capped", build)
+    return cached(spark, sf_dir, "shingles_capped", build)
 
 
 def q_dedup_near_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -454,9 +383,9 @@ def _containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             .filter(F.col("containment") >= F.lit(CONTAINMENT_THRESHOLD))
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "containment_pairs", build)
+    return cached(spark, sf_dir, "containment_pairs", build)
 
 
 SQL_DEDUP_CONTAINMENT = f"""
@@ -531,9 +460,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             _doc_tokens(spark, sf_dir)
             .select("doc_id", hashes.alias("h"))
             .filter(F.size("h") > 0)
-        )
+        ).persist()
 
-    hashed = _memo_persist(spark, sf_dir, "token_hashes", build_hashed)
+    hashed = cached(spark, sf_dir, "token_hashes", build_hashed)
     return hashed.select("doc_id", sim.cast("long").alias("simhash"))
 
 
@@ -593,16 +522,16 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             _doc_tokens(spark, sf_dir)
             .select("doc_id", hashes.alias("h"))
             .filter(F.size("h") > 0)
-        )
+        ).persist()
 
     def build_sigs() -> DataFrame:
-        hashed = _memo_persist(spark, sf_dir, "shingle_hashes", build_hashed)
+        hashed = cached(spark, sf_dir, "shingle_hashes", build_hashed)
         sig = F.array(
             *[minhash_component(F.col("h"), a, b) for a, b in MINHASH_AB]
         )
-        return hashed.select("doc_id", sig.alias("sig"))
+        return hashed.select("doc_id", sig.alias("sig")).persist()
 
-    return _memo_persist(spark, sf_dir, "signatures", build_sigs)
+    return cached(spark, sf_dir, "signatures", build_sigs)
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,11 +630,13 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — the input every cluster-resolution step shares. At 100 TB the
     pair table is written out by the dedup job; memoized persist is the
     in-session form (same contract as the token/shingle tables)."""
-    return _memo_persist(
+    return cached(
         spark,
         sf_dir,
         "neardup_pairs",
-        lambda: q_dedup_near_capped(spark, sf_dir).select("doc_a", "doc_b"),
+        lambda: q_dedup_near_capped(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .persist(),
     )
 
 
@@ -718,14 +649,15 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence job chain. At 100 TB the label table is a stored
     artifact of the dedup job; the memoized persist is the in-session
     form (same contract as neardup_pairs / the token tables)."""
-    cached = _memo_get(spark, sf_dir, "neardup_cluster_labels")
-    if cached is not None:
-        return cached
-    pairs = neardup_pairs(spark, sf_dir)
-    labels = resolve_clusters(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
-    return _memo_persist(spark, sf_dir, "neardup_cluster_labels", labels)
+    def build() -> DataFrame:
+        pairs = neardup_pairs(spark, sf_dir)
+        return resolve_clusters(
+            pairs.select(
+                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+            )
+        ).persist()
+
+    return cached(spark, sf_dir, "neardup_cluster_labels", build)
 
 
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -784,9 +716,9 @@ def q_dedup_cluster_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
                 .select(F.col("doc").alias("src"), F.col("doc").alias("dst"))
             )
-        )
+        ).persist()
 
-    adj = _memo_persist(spark, sf_dir, "neardup_adj", build_adj)
+    adj = cached(spark, sf_dir, "neardup_adj", build_adj)
     labels = adj.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("doc"), F.col("src").alias("label")
     )
@@ -1078,9 +1010,9 @@ def _line_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(
                 token_segments_col(tokens_col(F.col("text")), LINE_SEG_TOKENS)
             ).alias("pos", "seg"),
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "line_segments", build)
+    return cached(spark, sf_dir, "line_segments", build)
 
 
 def line_keep_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1293,9 +1225,9 @@ def _seg_near_pairs(
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == F.lit(1))
             .drop("rn")
-        )
+        ).persist()
 
-    canon = _memo_persist(spark, sf_dir, "seg_token_sets", build_canon)
+    canon = cached(spark, sf_dir, "seg_token_sets", build_canon)
     # Block keys: hash of the full sorted set, plus hash of every
     # delete-one subset (ts is distinct, so array_remove(ts, x) is
     # exactly the subset without x). The hash is the repo's PORTABLE
@@ -1326,9 +1258,9 @@ def _seg_near_pairs(
             "ts",
             _key(F.array_remove(F.col("ts"), F.col("x"))).alias("k"),
         )
-        return full.unionByName(dels)
+        return full.unionByName(dels).persist()
 
-    keys = _memo_persist(spark, sf_dir, "seg_block_keys", build_keys)
+    keys = cached(spark, sf_dir, "seg_block_keys", build_keys)
     if max_key_df is not None:
         # df-cap as a WINDOW count over k, not groupBy+left_semi (r17,
         # guide §2.4: a window partitioned by the join key needs no
@@ -1872,9 +1804,9 @@ def _span_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ),
         ).otherwise(F.array().cast("array<long>"))
-        return toks.select("doc_id", hs.alias("hs"))
+        return toks.select("doc_id", hs.alias("hs")).persist()
 
-    return _memo_persist(spark, sf_dir, "span_hashes", build)
+    return cached(spark, sf_dir, "span_hashes", build)
 
 
 def q_dedup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2585,9 +2517,9 @@ def q_source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return edges.withColumn(
             "frac", F.col("w") / F.sum("w").over(W.partitionBy("u"))
-        )
+        ).persist()
 
-    frac = _memo_persist(spark, sf_dir, "pagerank_frac", build_frac)
+    frac = cached(spark, sf_dir, "pagerank_frac", build_frac)
     nodes = (
         load_table(spark, sf_dir, "documents")
         .select(F.col("source").alias("src"))
@@ -2899,9 +2831,9 @@ def q_dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                     4,
                 ).alias("w"),
             )
-        )
+        ).persist()
 
-    w = _memo_persist(spark, sf_dir, "tfidf_cos_weighted_index", build_w)
+    w = cached(spark, sf_dir, "tfidf_cos_weighted_index", build_w)
     norms = w.groupBy("doc_id").agg(
         F.sum((F.col("w") * F.col("w")).cast("decimal(38,8)"))
         .cast("double")

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..memo import cached
 from .similarity import cosine_prenorm, dot, emb_base, sql_dot
 
 KMEANS_K = 4
@@ -906,8 +907,6 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n=5, noop): min 1.31 s -> 0.74 s, and the exploded-table memo
     (640k-row cache) is gone. Output row-identical (collect
     compared); oracle SQL twin unchanged."""
-    from .dedup import _memo_persist
-
     emb = emb_base(spark, sf_dir).select("vec_id", "v")
 
     def dsum6(col: F.Column) -> F.Column:
@@ -928,10 +927,10 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return e1.groupBy("dim").agg(
             dsum6(F.col("val") * F.col("dot")).alias("w")
-        )
+        ).persist()
 
     def build_w2() -> DataFrame:
-        w1 = _memo_persist(spark, sf_dir, "pca_w1", build_w1)
+        w1 = cached(spark, sf_dir, "pca_w1", build_w1)
         n1 = w1.agg(F.sqrt(dsum6(F.col("w") * F.col("w"))).alias("nrm"))
         v1 = w1.crossJoin(F.broadcast(n1)).select(
             "dim", (F.col("w") / F.col("nrm")).alias("vv")
@@ -951,9 +950,9 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return e2.groupBy("dim").agg(
             dsum6(F.col("val") * F.col("dot")).alias("w")
-        )
+        ).persist()
 
-    w2 = _memo_persist(spark, sf_dir, "pca_w2", build_w2)
+    w2 = cached(spark, sf_dir, "pca_w2", build_w2)
     lam = w2.agg(F.sqrt(dsum6(F.col("w") * F.col("w"))).alias("eigenvalue"))
     sgn = w2.filter(F.col("dim") == 0).select(
         F.when(F.col("w") >= 0, F.lit(1.0)).otherwise(F.lit(-1.0)).alias("s")

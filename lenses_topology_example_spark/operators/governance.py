@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.texthash import SQL_MD5_HASH64
+from ..memo import cached
 from ..tables import load_table
 from .relational import dsum, dsum4_sql, dsum_sql
 
@@ -69,31 +70,33 @@ def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table a production run materializes before a multi-check pass) and
     each fused aggregate emits ALL its report rows in one stack()
     unpivot instead of one .select per row."""
-    from .dedup import _memo_persist
-
-    li = _memo_persist(
+    li = cached(
         spark,
         sf_dir,
         "audit_lineitem_proj",
-        lambda: load_table(spark, sf_dir, "lineitem").select(
+        lambda: load_table(spark, sf_dir, "lineitem")
+        .select(
             "l_orderkey",
             "l_discount",
             "l_quantity",
             "l_extendedprice",
             "l_shipdate",
-        ),
+        )
+        .persist(),
     )
-    orders = _memo_persist(
+    orders = cached(
         spark,
         sf_dir,
         "audit_orders_proj",
-        lambda: load_table(spark, sf_dir, "orders").select(
+        lambda: load_table(spark, sf_dir, "orders")
+        .select(
             "o_orderkey",
             "o_custkey",
             "o_orderstatus",
             "o_totalprice",
             "o_orderdate",
-        ),
+        )
+        .persist(),
     )
     cust = load_table(spark, sf_dir, "customer")
 

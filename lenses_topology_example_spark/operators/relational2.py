@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..memo import cached
 from ..tables import load_table
 from .relational import dsum, dsum_sql
 
@@ -878,15 +879,14 @@ def order_part_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently constructing a plan under a shared memo key means
     first-built-wins; an edit to one site's projection would silently
     serve the other a stale, different frame)."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
+    return cached(
         spark,
         sf_dir,
         "order_part_distinct",
         lambda: load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
-        .distinct(),
+        .distinct()
+        .persist(),
     )
 
 
@@ -904,8 +904,6 @@ def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot silently serve the other a wrongly-pruned frame. This is the
     write-once pair-support table a production basket pipeline
     materializes before fanning out to recommenders and graph reports."""
-    from .dedup import _memo_persist
-
     def build() -> DataFrame:
         floor = min(BASKET_MIN_SUPPORT, TRI_MIN_SUPPORT)
         li = order_part_distinct(spark, sf_dir)
@@ -921,9 +919,9 @@ def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("pa", "pb")
             .agg(F.count(F.lit(1)).cast("long").alias("support"))
             .filter(F.col("support") >= F.lit(floor))
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "basket_pair_support", build)
+    return cached(spark, sf_dir, "basket_pair_support", build)
 
 
 def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,6 +39,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..memo import cached
 from .similarity import cosine_prenorm, emb_base
 from .text import (
     BM25_QUERIES,
@@ -66,8 +67,6 @@ def sem_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg) — with zero exchange reuse across them (the r16 standing
     plan-audit class). |Q|·k rows; the write-once per-leg ranking
     table of the bm25_topk_memo contract, semantic side."""
-    from .dedup import _memo_persist
-
     def build() -> DataFrame:
         emb = (
             emb_base(spark, sf_dir)
@@ -100,9 +99,9 @@ def sem_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rn", F.row_number().over(wsem))
             .filter(F.col("rn") <= F.lit(BM25_TOP_K))
             .select("query_id", "doc_id", F.col("rn").alias("rank"))
-        )
+        ).persist()
 
-    return _memo_persist(spark, sf_dir, "sem_topk", build)
+    return cached(spark, sf_dir, "sem_topk", build)
 
 
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,8 +476,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange reuse, embeddings scanned 4x). Cached it is |Q|·C rows;
     # at any corpus scale it is the write-once candidate table the
     # pairwise stage reads.
-    from .dedup import _memo_persist
-
     def build_cands() -> DataFrame:
         emb = (
             emb_base(spark, sf_dir)
@@ -513,9 +510,9 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("crn", F.row_number().over(wsem))
             .filter(F.col("crn") <= F.lit(MMR_CANDIDATES))
             .select("query_id", "doc_id", "dv", "dnrm", "rel")
-        )
+        ).persist()
 
-    cands = _memo_persist(spark, sf_dir, "mmr_cands", build_cands)
+    cands = cached(spark, sf_dir, "mmr_cands", build_cands)
     # pairwise sims inside the pool (|Q|·C² rows, bounded), JVM folds.
     # Self-pairs stay IN: they carry each candidate's rel into the
     # grouped map even when a query's pool has a single member (a

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.texthash import SQL_MD5_HASH64, md5_hash64
+from ..memo import cached
 from ..tables import load_table
 
 N_QUERIES = 5  # query set = vec_id < 5
@@ -97,7 +98,7 @@ def emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline — same IEEE sequence, computed once per vector. Consumers
     that filter zero norms or rename to `nrm` select from here.
     """
-    from .dedup import _memo_persist, _parallel_scan
+    from .dedup import _parallel_scan
 
     def build() -> DataFrame:
         emb = _parallel_scan(spark, load_table(spark, sf_dir, "embeddings"))
@@ -105,9 +106,9 @@ def emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             as_double(F.col("embedding")).alias("v"),
             "label",
-        ).withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v"))))
+        ).withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v")))).persist()
 
-    return _memo_persist(spark, sf_dir, "emb_base", build)
+    return cached(spark, sf_dir, "emb_base", build)
 
 
 # DuckDB twin of dot(): explicit left-fold, NOT list_dot_product (whose
@@ -722,31 +723,27 @@ def q_embed_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_pairs): without it every fixpoint round would re-run the
     bucketed corpus self-join that produced the edges — measured 11.4 s
     -> ~3 s at sf0.1."""
-    from .dedup import _memo_get, _memo_persist, resolve_clusters
+    from .dedup import resolve_clusters
 
     # label memo (r17): resolve_clusters is EAGER, so without this every
     # invocation re-ran the whole fixpoint job chain (the cluster_labels
     # contract, embed side)
-    labels = _memo_get(spark, sf_dir, "embed_cluster_labels")
-    if labels is None:
-        pairs = _memo_persist(
+    def build_labels() -> DataFrame:
+        pairs = cached(
             spark,
             sf_dir,
             "embed_neardup_pairs",
-            lambda: q_embed_neardup_catalog(spark, sf_dir).select(
-                "vec_a", "vec_b"
-            ),
+            lambda: q_embed_neardup_catalog(spark, sf_dir)
+            .select("vec_a", "vec_b")
+            .persist(),
         )
-        labels = _memo_persist(
-            spark,
-            sf_dir,
-            "embed_cluster_labels",
-            resolve_clusters(
-                pairs.select(
-                    F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
-                )
-            ),
-        )
+        return resolve_clusters(
+            pairs.select(
+                F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
+            )
+        ).persist()
+
+    labels = cached(spark, sf_dir, "embed_cluster_labels", build_labels)
     return labels.select(
         F.col("doc").alias("vec_id"),
         F.col("label").alias("cluster_id"),
@@ -789,13 +786,13 @@ def sim_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     The frame is |Q|·k rows of integer ids — at ANY corpus scale it is
     the write-once ground-truth table every recall audit reads, which
     is exactly how a production eval harness stores it."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
+    return cached(
         spark,
         sf_dir,
         "sim_topk_truth",
-        lambda: q_sim_topk(spark, sf_dir).select("query_id", "neighbor_id"),
+        lambda: q_sim_topk(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .persist(),
     )
 
 
@@ -930,8 +927,6 @@ def q_embed_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads (bounded by bucket co-occurrence, not |corpus|²). Cosines are
     the established prenormalized fold (identical IEEE chain both
     engines), compared against exact decimal literals."""
-    from .dedup import _memo_persist
-
     def build_pairs() -> DataFrame:
         emb = emb_base(spark, sf_dir).select("vec_id", "v", "norm")
         bucketed = emb.withColumn("bucket", _bucket_col(F.col("v")))
@@ -947,9 +942,9 @@ def q_embed_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_prenorm(
                 F.col("a.v"), F.col("b.v"), F.col("a.norm"), F.col("b.norm")
             ).alias("cos_sim"),
-        )
+        ).persist()
 
-    pairs = _memo_persist(spark, sf_dir, "embed_sweep_pairs", build_pairs)
+    pairs = cached(spark, sf_dir, "embed_sweep_pairs", build_pairs)
     # coalesce each conditional sum to 0: on an EMPTY corpus (or an
     # empty bucket-pair frame) SUM is NULL, and the sweep must report
     # 0 pairs/docs/removals like the oracle's COUNT subqueries do
@@ -1437,8 +1432,6 @@ def q_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer rows, the write-once ranking table the audit reads)."""
     from pyspark.sql import Window as W
 
-    from .dedup import _memo_persist
-
     def build_topk() -> DataFrame:
         emb = emb_base(spark, sf_dir).select("vec_id", "v")
         q = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -1480,9 +1473,9 @@ def q_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= TOP_K)
             .select("query_id", "neighbor_id", "dim")
-        )
+        ).persist()
 
-    topk = _memo_persist(spark, sf_dir, "mrl_topk", build_topk)
+    topk = cached(spark, sf_dir, "mrl_topk", build_topk)
     truth = topk.filter(F.col("dim") == _MRL_FULL).select(
         "query_id", "neighbor_id"
     )

@@ -28,6 +28,7 @@ import pandas as pd  # module-level: pandas_udf resolves stringified hints here
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..memo import cached
 from ..tables import load_table
 
 
@@ -957,15 +958,14 @@ def events_nonnull_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist, so the cache holds exactly the pruned value space both
     contracts pin (round-14 NULL-ordering class) — at any scale this is
     the staged audit table a production run materializes once."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
+    return cached(
         spark,
         sf_dir,
         "events_nonnull_values",
         lambda: load_table(spark, sf_dir, "events")
         .select("event_type", "event_id", "value")
-        .filter(F.col("value").isNotNull()),
+        .filter(F.col("value").isNotNull())
+        .persist(),
     )
 
 

@@ -17,6 +17,7 @@ from ..functions.texthash import (
     polynomial_fingerprint,
     sql_polynomial_fingerprint,
 )
+from ..memo import cached
 from ..tables import load_table
 from .dedup import SQL_TOKS
 from .wordcount import tokens_col
@@ -2215,10 +2216,11 @@ def bm25_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the write-once ranking table a retrieval stack stores once and
     every fusion/eval pass reads — which is exactly how hybrid search
     engines persist per-leg rankings before fusing."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
-        spark, sf_dir, "bm25_topk", lambda: q_bm25_search(spark, sf_dir)
+    return cached(
+        spark,
+        sf_dir,
+        "bm25_topk",
+        lambda: q_bm25_search(spark, sf_dir).persist(),
     )
 
 

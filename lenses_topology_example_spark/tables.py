@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .memo import cached
+
 TABLES = (
     "region",
     "nation",
@@ -42,50 +44,18 @@ def parquet_source(sf_dir: str, name: str) -> str:
     return f"{path}/*.parquet" if os.path.isdir(path) else path
 
 
-# Per-session loaded-frame memo (round 16): `spark.read.parquet` pays a
-# driver-side footer/schema read on EVERY call, and a full 287-entry
-# catalog build issues ~800 load_table calls over only ~10 distinct
-# (sf_dir, table) sources — measured 68.5 s -> 48.8 s for the whole
-# plan-build phase with this memo (pytest's catalog_dfs fixture,
-# driver_sim's build loop, and bench.py's warmup all ride it). Safe
-# because DataFrames are immutable plan handles and the testdata/slice
-# files never change within a session; keyed by applicationId so a
-# frame never leaks across SparkSessions (a frame from a stopped
-# session would crash its consumer).
-_LOADED: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load (or serve the memoized) DataFrame for a testdata table.
-
-    SHARED-OBJECT CONTRACT (r16 ADVICE): repeated loads return the SAME
-    DataFrame object, so a self-join of two load_table results must go
-    through ``.alias()`` — two independent reads no longer provide
-    distinct expression IDs.
-    """
+    Repeated loads return the SAME object (memo.py), so a self-join of
+    two load_table results must go through ``.alias()``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    cached = _LOADED.get(key)
-    if cached is not None:
-        return cached
-    # frames of other STOPPED sessions can never be served again —
-    # drop them so a process that cycles many sessions (the pytest
-    # suite, repeated get_spark tools) holds at most one session's
-    # worth of plan handles. Mirror _memo_persist's demonstrably-
-    # stopped probe (r16 ADVICE): two concurrently live sessions must
-    # not evict each other's loader memo on every call.
-    for k in [k for k in _LOADED if k[0] != app]:
-        try:
-            jsc = _LOADED[k].sparkSession.sparkContext._jsc
-            stopped = jsc is None or jsc.sc().isStopped()
-        except Exception:
-            # leak-on-doubt, same as _memo_persist: evicting a live
-            # foreign session's entry would defeat the amortization
-            stopped = False
-        if stopped:
-            del _LOADED[k]
+    return cached(
+        spark, sf_dir, f"table:{name}", lambda: _read(spark, sf_dir, name)
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         # The generator has shipped `ts` in either of two physical layouts:
@@ -132,5 +102,4 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-    _LOADED[key] = df
     return df

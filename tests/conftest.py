@@ -23,6 +23,19 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def fresh_sf_dir(spark, sf_dir, tmp_path):
+    """The testdata tables under a new path, so no session memo entry is
+    keyed on it yet. Its entries are dropped afterwards."""
+    from lenses_topology_example_spark import memo
+    from lenses_topology_example_spark.tables import TABLES
+
+    for t in TABLES:
+        os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    yield str(tmp_path)
+    memo.drop(spark, str(tmp_path))
+
+
 @pytest.fixture(scope="session")
 def catalog_dfs(spark, sf_dir):
     """Every catalog entry's DataFrame, built ONCE per session and
@@ -48,8 +61,8 @@ def catalog_dfs(spark, sf_dir):
     # oversubscribe the driver during setup and the JVM pays for the
     # rest of the run). 8 is the measured optimum; don't re-raise
     # without timing the WHOLE suite. Entries that build
-    # eagerly (fixpoint resolvers, memoized persists) are thread-safe
-    # by their own locks (dedup._MATERIALIZED_LOCK).
+    # eagerly (fixpoint resolvers, memoized persists) do so inside a
+    # memo.cached thunk, which runs once per key under that key's lock.
     names = [n for n in _CATALOG if n != "sink_parquet"]
 
     def build(name):

@@ -48,3 +48,26 @@ def test_headline_covers_catalog():
     allowed to exceed the catalog only never to miss part of it."""
     missing = [n for n in _CATALOG if n not in set(bench.HEADLINE)]
     assert not missing, f"catalog entries outside the bench gate: {missing}"
+
+
+def test_timed_loop_times_memo_builds_in_own_rows(spark, fresh_sf_dir):
+    """Two consumers of the shared token table: its build (and the
+    documents load under it) is timed once, as `memo:<key>` rows placed
+    before the first consumer, the second consumer's row carries no
+    build, and the rows add up to the loop's wall time."""
+    from lenses_topology_example_spark import memo
+    from lenses_topology_example_spark.catalog import queries
+    from lenses_topology_example_spark.conf import ensure_runtime_confs
+
+    ensure_runtime_confs(spark)
+    first, second = "pmi_collocations", "corpus_drift"
+    with memo.recording() as builds:
+        rows, wall = bench.timed_loop(
+            spark, queries(), [first, second], fresh_sf_dir
+        )
+    keys = list(rows)
+    built = [f"memo:{k}" for k, _, _ in builds]
+    assert "memo:tokens" in built
+    assert len(built) == len(set(built)), f"a memo was built twice: {built}"
+    assert keys == built + [first, second]
+    assert abs(sum(rows.values()) - wall) <= 0.05 * wall

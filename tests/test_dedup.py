@@ -129,71 +129,6 @@ def test_dedup_cluster_matches_fixpoint(spark, sf_dir):
     assert keepers == {c for _, c in got}
 
 
-def test_memo_eviction_only_stopped_sessions(spark, sf_dir):
-    """_memo_persist must not thrash entries of OTHER LIVE sessions
-    (round-2 ADVICE: eviction keyed on 'differs from current app'
-    re-persisted the victim's frames unboundedly): a foreign entry whose
-    context is alive survives the sweep; one whose context is
-    DEMONSTRABLY stopped (_jsc gone — the classic stop signature) is
-    unpersisted best-effort and dropped; and (round-3 ADVICE) one whose
-    liveness probe fails for an UNKNOWN reason (e.g. Spark Connect has
-    no _jsc chain at all) is KEPT — leak-on-doubt, never evict a
-    possibly-live foreign session's frame."""
-    from lenses_topology_example_spark.operators import dedup as D
-
-    class _StoppedFrame:
-        # sparkSession.sparkContext._jsc is None == stopped context
-        unpersisted = False
-
-        class _Sess:
-            class sparkContext:
-                _jsc = None
-
-        sparkSession = _Sess()
-
-        def unpersist(self):
-            self.unpersisted = True
-
-    class _UnknownFrame:
-        unpersisted = False
-
-        @property
-        def sparkSession(self):
-            raise RuntimeError("probe failed for unknown cause")
-
-        def unpersist(self):
-            self.unpersisted = True
-
-    class _LiveFrame:
-        def __init__(self, sess):
-            self._s = sess
-
-        @property
-        def sparkSession(self):
-            return self._s
-
-    dead, unknown, live = _StoppedFrame(), _UnknownFrame(), _LiveFrame(spark)
-    dead_key = ("dead-app-id", "x", "k")
-    unknown_key = ("unknown-app-id", "x", "k")
-    live_key = ("other-live-app-id", "x", "k")
-    with D._MATERIALIZED_LOCK:
-        D._MATERIALIZED[dead_key] = dead
-        D._MATERIALIZED[unknown_key] = unknown
-        D._MATERIALIZED[live_key] = live
-    try:
-        D._doc_tokens(spark, sf_dir)  # any memo call runs the sweep
-        with D._MATERIALIZED_LOCK:
-            assert dead_key not in D._MATERIALIZED
-            assert dead.unpersisted
-            assert unknown_key in D._MATERIALIZED
-            assert not unknown.unpersisted
-            assert live_key in D._MATERIALIZED
-    finally:
-        with D._MATERIALIZED_LOCK:
-            D._MATERIALIZED.pop(live_key, None)
-            D._MATERIALIZED.pop(unknown_key, None)
-
-
 def test_containment_catches_subset_jaccard_misses(spark, tmp_path):
     """A short doc fully quoted inside a much longer one: Jaccard =
     |A|/|B| falls below the near-dup threshold, but containment(A->B)

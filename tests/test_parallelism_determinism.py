@@ -15,28 +15,8 @@ import math
 
 import pytest
 
-from lenses_topology_example_spark import tables
+from lenses_topology_example_spark import memo, tables
 from lenses_topology_example_spark.operators import dedup, similarity
-
-
-def _evict_memos(spark, sf_dir):
-    """Drop every session memo for this (app, sf_dir) so each
-    repartitioned run REBUILDS the memoized frames under the injected
-    partitioning (r17 ADVICE: the base run populated pagerank_frac /
-    emb_base / containment_pairs, so later runs consumed the cached
-    frame and the test passed vacuously)."""
-    app_id = spark.sparkContext.applicationId
-    with dedup._MATERIALIZED_LOCK:
-        for k in [
-            k
-            for k in dedup._MATERIALIZED
-            if k[0] == app_id and k[1] == sf_dir
-        ]:
-            try:
-                dedup._MATERIALIZED[k].unpersist()
-            except Exception:
-                pass
-            del dedup._MATERIALIZED[k]
 
 
 def _canon_rows(df):
@@ -61,8 +41,14 @@ def _run_with_parts(spark, sf_dir, module, fn_name, n_parts):
     repartition is injected AFTER that frame instead — same lever
     (partial-aggregation accumulation order downstream of the input),
     and it sidesteps the memo, which would otherwise serve the first
-    run's partitioning to every later run."""
-    _evict_memos(spark, sf_dir)
+    run's partitioning to every later run.
+
+    Every session memo for this (app, sf_dir) is dropped first, so each
+    repartitioned run REBUILDS the memoized frames under the injected
+    partitioning (otherwise the base run populates pagerank_frac /
+    emb_base / containment_pairs, later runs consume the cached frame,
+    and the test passes vacuously)."""
+    memo.drop(spark, sf_dir)
     patches = []  # (obj, attr, original) to restore
 
     def _patch(obj, attr, repl):
@@ -103,7 +89,7 @@ def _run_with_parts(spark, sf_dir, module, fn_name, n_parts):
             setattr(obj, attr, orig)
         # memos built under the injected partitioning must not leak
         # into later runs/tests
-        _evict_memos(spark, sf_dir)
+        memo.drop(spark, sf_dir)
 
 
 # (module path, query fn) — the accumulation-order-sensitive classes:

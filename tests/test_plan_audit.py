@@ -13,13 +13,8 @@ anchor, bench_anchors.json) — below that, re-deriving a cheap frame
 beats paying a persist. Counting is per-table, not total: a 5-way
 multi-table join touches 5 relations once each and is fine; lineitem
 appearing 12 times in one plan (copurchase_triangles pre-fix) is the
-defect.
-
-Companion gate (r15 VERDICT ask #7): every FIRST_EXECUTION_CEILING
-entry in tools/bench_compare.py exists BECAUSE its plan materializes a
-memo once in-suite — if the memo is ever removed, the widened ceiling
-would silently forgive a real regression, so a ceiling without an
-InMemoryRelation in its plan is stale and fails here.
+defect. The fix is a memo: build the shared frame once through
+memo.cached; bench.py then times that build as its own row.
 """
 
 from __future__ import annotations
@@ -84,25 +79,6 @@ def test_no_unmemoized_repeated_subplans(catalog_dfs):
     assert not suspects, (
         "repeated-subplan suspects (same base table scanned >= "
         f"{REF_THRESHOLD}x, no memo, in-suite cost > {COST_FLOOR_SEC}s "
-        "— memo-persist the shared frame via dedup._memo_persist, "
-        f"re-anchor, and record a first-execution ceiling): {suspects}"
-    )
-
-
-def test_first_execution_ceilings_are_backed_by_memo(catalog_dfs):
-    from tools.bench_compare import FIRST_EXECUTION_CEILING
-
-    stale = []
-    for name in FIRST_EXECUTION_CEILING:
-        df = catalog_dfs.get(name)
-        assert df is not None, (
-            f"FIRST_EXECUTION_CEILING lists '{name}' which is not a "
-            "buildable catalog entry — remove the stale ceiling"
-        )
-        if "InMemoryRelation" not in _optimized(df):
-            stale.append(name)
-    assert not stale, (
-        "FIRST_EXECUTION_CEILING entries whose plan no longer contains "
-        "an InMemoryRelation — the widened ceiling would forgive a real "
-        f"regression; remove the ceiling or restore the memo: {stale}"
+        "— build the shared frame once via memo.cached(..., lambda: "
+        f"frame.persist()) and re-anchor): {suspects}"
     )

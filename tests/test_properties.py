@@ -331,8 +331,8 @@ def test_hard_negatives_property_random_labels(spark, sf_dir, labels):
 
     import numpy as np
 
-    import lenses_topology_example_spark.operators.dedup as dmod
     import lenses_topology_example_spark.operators.similarity as smod
+    from lenses_topology_example_spark import memo
     from lenses_topology_example_spark.operators.similarity import (
         N_QUERIES,
         TOP_K,
@@ -353,13 +353,7 @@ def test_hard_negatives_property_random_labels(spark, sf_dir, labels):
         out = smod.q_hard_negative_mining(spark, token).collect()
     finally:
         smod.load_table = orig
-        with dmod._MATERIALIZED_LOCK:
-            for k in [k for k in dmod._MATERIALIZED if k[1] == token]:
-                try:
-                    dmod._MATERIALIZED[k].unpersist()
-                except Exception:
-                    pass
-                del dmod._MATERIALIZED[k]
+        memo.drop(spark, token)
 
     vecs = {r[0]: np.asarray(r[1], dtype=np.float64) for r in rows}
     labs = {r[0]: r[2] for r in rows}

@@ -22,9 +22,11 @@ quiet minimums with unchanged plans (measured and adjudicated in
 BASELINE.md round 8 — kmeans_refine read 5.6 s in-suite, 1.3 s
 isolated). The adjudication protocol is: rerun every flagged query
 with `python tools/iso_bench.py <name> ...` (fresh JVM, warmup, n=3)
-and only an ISOLATED reading above the bar is a regression. Known
-first-execution entries (the dedup fixpoint/segment family) carry
-their own documented bands in BASELINE.md and a wider ceiling here.
+and only an ISOLATED reading above the bar is a regression.
+
+Shared memo builds are timed as their own `memo:<key>` rows (bench.py),
+so no entry carries a build and every entry is gated at BAR x anchor.
+The memo rows are listed with their seconds and not flagged.
 """
 
 from __future__ import annotations
@@ -40,38 +42,7 @@ import sys
 # and only an ISOLATED minimum above 2x is a regression. Keep this
 # number and that sentence in sync.
 BAR = 3.0
-# First-execution entries: in-suite they pay a one-time cache/fixpoint
-# build (BASELINE.md bands); adjudicate at the documented band ceiling
-# instead of BAR x the steady-state anchor.
-FIRST_EXECUTION_CEILING = {
-    "dedup_lines_near": 12.0,
-    "dedup_lines_near_capped": 30.0,
-    "dedup_keeper_quality": 10.0,
-    "dedup_savings": 8.0,  # rides whichever consumer builds the memo
-    # round 15: the weighted index is memo-persisted (steady-state
-    # anchor 1.49; the in-suite run materializes the index once at
-    # ~3.8-5 s — the OLD unmemoized plan's whole cost, so the ceiling
-    # is the old in-suite envelope)
-    "dedup_tfidf_cosine": 8.0,
-    # round 15: edge frame + shared (order,part) distinct memo-persisted
-    # (first in-suite run pays the old plan's cost once)
-    "copurchase_triangles": 6.0,
-    "basket_lift": 6.0,
-    # round 16: the exploded frame + both matvec outputs are
-    # memo-persisted (standing plan-audit gate; steady-state 0.61 s,
-    # 3.0x, but the in-suite first execution materializes the
-    # iteration state at ~2.2 s — above 3x the new anchor)
-    "embed_pca_power": 5.0,
-    # round 16: the three recall audits share the sim_topk_memo
-    # brute-force truth frame (plan-audit wave) — the ~4-5 s
-    # materialization rides WHICHEVER of the three the suite executes
-    # first (dedup_savings class; observed landing on ann_recall_ivf
-    # in one quiet sample and ann_recall in another), so each needs
-    # the envelope while the other two read steady-state
-    "ann_recall": 6.0,
-    "ann_recall_ivf": 6.0,
-    "ivf_probe_sweep": 6.0,
-}
+
 
 def main() -> int:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -113,23 +84,28 @@ def main() -> int:
             "comparable across scale factors"
         )
     anchors = book["anchors"]
-    flagged, unanchored = [], []
+    flagged, unanchored, builds = [], [], []
     for name, sec in sorted(bench["queries"].items()):
+        if name.startswith("memo:"):
+            builds.append((name, sec))
+            continue
         a = anchors.get(name)
         if a is None:
             unanchored.append(name)
             continue
-        ceiling = FIRST_EXECUTION_CEILING.get(name, BAR * a)
-        if sec > ceiling:
+        if sec > BAR * a:
             flagged.append((name, sec, a, sec / a))
     for name, sec, a, ratio in sorted(flagged, key=lambda t: -t[3]):
         print(f"FLAG {name}: {sec:.2f}s vs anchor {a:.2f}s ({ratio:.1f}x)")
     for name in unanchored:
         print(f"NO-ANCHOR {name} (add to bench_anchors.json next quiet run)")
-    n = len(bench["queries"])
+    for name, sec in sorted(builds, key=lambda t: -t[1]):
+        print(f"BUILD {name}: {sec:.2f}s")
+    n = len(bench["queries"]) - len(builds)
     print(
         f"bench_compare: {n} queries, {len(flagged)} flagged, "
-        f"{len(unanchored)} unanchored, suite {bench['value']}s "
+        f"{len(unanchored)} unanchored, {len(builds)} memo builds "
+        f"({sum(s for _, s in builds):.1f}s), suite {bench['value']}s "
         f"(sf {bench.get('sf')})"
     )
     return 1 if flagged else 0
