@@ -2,7 +2,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 Driver heap: $SPARK_GRAFT_DRIVER_MEM (default: half of MemAvailable,
-capped at 32g at sf<=0.5 and 64g above — see default_heap()).
+capped at 32g at sf<=0.5 and 64g above — see session.default_heap()).
 
 Output contract (round-8 revision — BENCH_r07 came back unparseable
 because the 103-query map on the final line overflowed the driver's
@@ -57,7 +57,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lenses_topology_example_spark import catalog, memo
-from lenses_topology_example_spark.session import DEFAULT_SF_DIR, cpu_count, get_spark
+from lenses_topology_example_spark.session import (
+    DEFAULT_SF_DIR,
+    cpu_count,
+    default_heap,
+    get_spark,
+)
 
 # Headline set: every tier represented — flagship pipeline, heavy aggs +
 # joins, windows, dedup (exact/minhash/jaccard), similarity (exact + LSH),
@@ -567,19 +572,6 @@ def _load_gate() -> dict:
     return gate
 
 
-def default_heap(sf: float) -> str:
-    """Half of MemAvailable in whole 512 MB steps, capped at the measured
-    working set (~17 GB pre-GC at sf0.1 -> 32g; 64g above sf0.5). The
-    heap is pinned and pre-touched (session.py), so it must fit in what
-    the host has free, not what a bigger host had."""
-    with open("/proc/meminfo") as f:
-        avail_kb = next(
-            int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:")
-        )
-    cap_mb = 32768 if sf <= 0.5 else 65536
-    return f"{max(1024, min(cap_mb, avail_kb // 2048 // 512 * 512))}m"
-
-
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -629,7 +621,7 @@ def main() -> None:
     spark = get_spark(
         "bench",
         driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-        or default_heap(sf),
+        or default_heap(sf_dir),
     )
 
     qs = catalog.queries()

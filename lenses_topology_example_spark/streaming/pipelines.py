@@ -26,7 +26,10 @@ Reference mapping:
 State at scale: the wordcount aggregate state is bounded by |vocab|;
 event-time aggs carry watermarks so state is GC'd; for 100 TB keyspaces
 switch the state store to RocksDB
-(spark.sql.streaming.stateStore.providerClass).
+(spark.sql.streaming.stateStore.providerClass). Local checkpoints and
+state files go through Hadoop's raw local FileContext (session.py): no
+.crc sidecars, so half the chmod/readlink forks per file, while Spark's
+own <N>.delta.crc state checksums stay.
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ from lenses_topology_example_spark.streaming.pipelines import (
     streaming_dedup,
     streaming_join_payments_audit,
     streaming_running_count,
+    streaming_wordcount,
     windowed_counts,
 )
 
@@ -508,6 +509,105 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     result = spark.read.parquet(out)
     assert result.count() == 1000, "rows duplicated or lost across restart"
     assert result.select("payment_id").distinct().count() == 1000
+
+
+def _write_corpus_parts(corpus, parts) -> None:
+    for i, part in enumerate(parts):
+        (corpus / f"part{i}.txt").write_text("\n".join(part))
+
+
+def _start_wordcount_updates(spark, corpus, ckpt, updates: dict):
+    """Update-mode word count over ``corpus``, one file per micro-batch,
+    checkpointed at ``ckpt``; every emitted (word, count) lands in
+    ``updates`` (later batches overwrite earlier ones)."""
+    lines = (
+        spark.readStream.option("maxFilesPerTrigger", 1)
+        .format("text")
+        .load(str(corpus))
+    )
+
+    def collect(batch, _batch_id):
+        updates.update((r["word"], r["count"]) for r in batch.collect())
+
+    return (
+        streaming_wordcount(lines)
+        .writeStream.outputMode("update")
+        .foreachBatch(collect)
+        .option("checkpointLocation", str(ckpt))
+        .start()
+    )
+
+
+def test_wordcount_checkpoint_has_no_hadoop_sidecars(spark, tmp_path):
+    """Checkpoint files on file:// go through the raw local FileContext
+    (session.py): no ``.<name>.crc`` sidecar next to any offsets, commits
+    or state file, while Spark's own ``<N>.delta.crc`` state checksums
+    are still written."""
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    _write_corpus_parts(corpus, [CORPUS_LINES[:8], CORPUS_LINES[8:]])
+    ckpt = tmp_path / "wc_ckpt"
+    q = _start_wordcount_updates(spark, corpus, ckpt, {})
+    try:
+        q.processAllAvailable()
+        batches = {p["batchId"] for p in q.recentProgress if p["numInputRows"]}
+    finally:
+        q.stop()
+    assert batches == {0, 1}
+
+    files = [
+        os.path.relpath(os.path.join(d, n), ckpt)
+        for d, _, names in os.walk(ckpt)
+        for n in names
+    ]
+    sidecars = [
+        f for f in files
+        if os.path.basename(f).startswith(".") and f.endswith(".crc")
+    ]
+    assert sidecars == []
+    deltas = [f for f in files if re.fullmatch(r"state/0/\d+/\d+\.delta", f)]
+    assert deltas
+    assert all(f"{f}.crc" in files for f in deltas)
+
+
+def test_wordcount_state_recovers_across_restart(spark, tmp_path):
+    """Stop a stateful word count after 2 micro-batches, add a third
+    file, restart on the same checkpoint: the counts the restarted query
+    emits must be the batch word count over all three files — the state
+    deltas written before the restart are read back."""
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    parts = [CORPUS_LINES[:5], CORPUS_LINES[5:10], CORPUS_LINES[10:]]
+    _write_corpus_parts(corpus, parts[:2])
+    ckpt = tmp_path / "wc_ckpt"
+
+    first: dict = {}
+    q = _start_wordcount_updates(spark, corpus, ckpt, first)
+    try:
+        q.processAllAvailable()
+        batch_ids = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert batch_ids == [0, 1]
+
+    (corpus / "part2.txt").write_text("\n".join(parts[2]))
+    updated: dict = {}
+    q = _start_wordcount_updates(spark, corpus, ckpt, updated)
+    try:
+        q.processAllAvailable()
+        batch_ids = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert batch_ids == [2]
+
+    golden = {
+        r["word"]: r["count"]
+        for r in streaming_wordcount(spark.read.text(str(corpus))).collect()
+    }
+    # the third file repeats words of the first two, so carried state shows
+    assert set(updated) & set(first)
+    assert updated == {w: golden[w] for w in updated}
+    assert {**first, **updated} == golden
 
 
 def test_decode_image_stub_raises():

@@ -28,7 +28,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lenses_topology_example_spark import catalog  # noqa: E402
-from lenses_topology_example_spark.session import cpu_count, get_spark  # noqa: E402
+from lenses_topology_example_spark.session import (  # noqa: E402
+    cpu_count,
+    default_heap,
+    get_spark,
+)
 
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/r18_sf1")
 DOCS10 = os.environ.get("SPARK_GRAFT_DOCS10_DIR", "/tmp/r18_docs10")
@@ -106,7 +110,7 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown arg {args[i]}")
     cpus = cpu_count()
-    spark = get_spark("core_scaling", driver_memory="32g")
+    spark = get_spark("core_scaling", driver_memory=default_heap(SF1))
     qs = catalog.queries()
 
     def noop(name: str, sf: str) -> float:

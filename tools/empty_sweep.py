@@ -54,7 +54,7 @@ def build_empty_dataset(dst: str, schema_src: str) -> None:
 
 def main() -> int:
     from lenses_topology_example_spark import catalog
-    from lenses_topology_example_spark.session import get_spark
+    from lenses_topology_example_spark.session import default_heap, get_spark
     from oracle import compare
 
     schema_src = os.environ.get(
@@ -63,7 +63,7 @@ def main() -> int:
     dst = "/tmp/spark_graft_empty"
     build_empty_dataset(dst, schema_src)
 
-    spark = get_spark("empty-sweep", driver_memory="16g")
+    spark = get_spark("empty-sweep", driver_memory=default_heap(schema_src))
     qs, sqls = catalog.queries(), catalog.oracle_sql()
     err, mismatch, expected, ok = [], [], [], 0
     for name in sorted(sqls):

@@ -20,7 +20,10 @@ sys.path.insert(
 )
 
 from lenses_topology_example_spark import catalog  # noqa: E402
-from lenses_topology_example_spark.session import get_spark  # noqa: E402
+from lenses_topology_example_spark.session import (  # noqa: E402
+    default_heap,
+    get_spark,
+)
 
 
 def main() -> None:
@@ -42,7 +45,7 @@ def main() -> None:
             names.append(args[i]); i += 1
     warm_dir = sf_dir.replace("sf0.1", "sf0.001")
     warm = warm_dir != sf_dir and os.path.isdir(warm_dir)
-    spark = get_spark("iso-bench", driver_memory="40g")
+    spark = get_spark("iso-bench", driver_memory=default_heap(sf_dir))
     qs = catalog.queries()
     for name in names:
         if warm:

@@ -23,7 +23,10 @@ sys.path.insert(
 )
 
 from lenses_topology_example_spark import catalog  # noqa: E402
-from lenses_topology_example_spark.session import get_spark  # noqa: E402
+from lenses_topology_example_spark.session import (  # noqa: E402
+    default_heap,
+    get_spark,
+)
 
 
 def main() -> None:
@@ -39,7 +42,7 @@ def main() -> None:
             sf_dir = args[i + 1]; i += 2
         else:
             names.append(args[i]); i += 1
-    spark = get_spark("profile", driver_memory="40g")
+    spark = get_spark("profile", driver_memory=default_heap(sf_dir))
     sc = spark.sparkContext
     tracker = sc.statusTracker
     qs = catalog.queries()

@@ -50,19 +50,21 @@ def main() -> int:
     from pyspark.sql import SparkSession, functions as F
 
     from lenses_topology_example_spark import catalog
+    from lenses_topology_example_spark.session import default_heap
 
     names = sys.argv[1:]
     if not names:
         raise SystemExit("pass entry names")
 
-    # audit tool, not the driver replica: a big heap is fine here (the
-    # countDistinct shuffles over 15M+-row results need it at sf10)
+    # audit tool, not the driver replica: as big a heap as the host can
+    # spare (the countDistinct shuffles over 15M+-row results need it
+    # at sf10)
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("row-audit")
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_SIM_DRIVER_MEM", "48g"),
+            os.environ.get("SPARK_GRAFT_SIM_DRIVER_MEM") or default_heap(SF),
         )
         .getOrCreate()
     )

@@ -52,7 +52,7 @@ SCALED_TABLES = ("lineitem", "orders", "customer", "part", "supplier")
 
 def main() -> int:
     from lenses_topology_example_spark import catalog
-    from lenses_topology_example_spark.session import get_spark
+    from lenses_topology_example_spark.session import default_heap, get_spark
 
     args = sys.argv[1:]
     top_n = 60
@@ -109,7 +109,7 @@ def main() -> int:
         names = [n for n, _ in ranked[:top_n]]
     # sink_parquet writes on build — harmless here (scratch dir) but its
     # timing would measure the write twice; keep it if explicitly named.
-    spark = get_spark("scale-bench", driver_memory="90g")
+    spark = get_spark("scale-bench", driver_memory=default_heap(big_dir))
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     def run(name: str, sf_dir: str) -> float:
