@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: runs every catalog entry, in catalog order, at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS].
 Driver heap: $SPARK_GRAFT_DRIVER_MEM (default: half of MemAvailable,
 capped at 32g at sf<=0.5 and 64g above — see session.default_heap()).
 
@@ -12,11 +13,7 @@ tail-capture buffer):
   * the LAST line is compact and always fits:
     {"metric": "suite_seconds", "value": N, "unit": "sec",
      "queries": {<top-10 slowest>: sec}, "n_queries": K,
-     "tier": "full"|"core", "full_map": "bench_full_latest.json",
-     "sf": 0.1}
-
-`--headline-core` runs only HEADLINE_CORE (the long-lived comparable
-set) for fast iteration; the round's final BENCH runs the full tier.
+     "tier": "full", "full_map": "bench_full_c{cpus}.json", "sf": 0.1}
 
 Each query is forced through the noop sink (full plan execution, zero
 result-materialization overhead on the driver) — the number measures the
@@ -63,449 +60,6 @@ from lenses_topology_example_spark.session import (
     default_heap,
     get_spark,
 )
-
-# Headline set: every tier represented — flagship pipeline, heavy aggs +
-# joins, windows, dedup (exact/minhash/jaccard), similarity (exact + LSH),
-# text analysis, multimodal decode plumbing.
-HEADLINE = (
-    "payments_pipeline",
-    "wordcount",
-    "agg_revenue",
-    "join_orders_customer",
-    "region_revenue",
-    "topk_spenders",
-    "rank_top_payments",
-    "window_running",
-    "tumbling_count",
-    "session_count",
-    "asof_rate",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_near_capped",
-    # dedup_near_capped (df-capped candidate generation) and minhash are
-    # the production near-dup paths — the only forms whose join fan-out
-    # is bounded on a Zipf-headed corpus (see SCALING.md). The uncapped
-    # dedup_near_jaccard stays in the catalog as the oracle-exactness
-    # twin (driver-checked) but is not a headline: its sum(df^2) cost is
-    # quadratic in the hot-shingle head at real scale, even though at
-    # sf0.1 it happens to run ~0.4 s faster (no Zipf head in testdata).
-    "sim_topk",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "embed_neardup",
-    "text_stats",
-    "curation_pipeline",
-    "doc_fingerprint",
-    "image_features",
-    "gen_payments",
-    # round-3 additions (suite total grows accordingly — comparability
-    # note in BASELINE.md): the zero-shuffle repetition signals and the
-    # broadcast eval-membership pass
-    "repetition_stats",
-    "decontaminate",
-    # round-4 additions: sub-document dedup, SemDeDup keeper selection,
-    # and the zero-shuffle PII screen (baseline re-anchored this round —
-    # BASELINE.md carries the n=5 median table for the full set)
-    "dedup_lines",
-    "embed_dedup_cluster",
-    "pii_scrub",
-    "lm_score",
-    "token_entropy",
-    # round-5 additions (suite total grows ~8-11 s — BASELINE.md round-5
-    # note): segment-grain near-dup is the heaviest new entry (~7-10 s
-    # in-suite, COLD per fresh-JVM run: seg-table cache + AQE/codegen of
-    # the suite's largest plan; warm steady-state ~1.7 s). The synthetic
-    # corpus has a 31-word vocabulary, so ~645k segment pairs genuinely
-    # clear the 0.65 Jaccard bar — output volume, not plan shape
-    # (delete-one blocking, verify-inside-join; SCALING.md round-5)
-    "dedup_lines_near",
-    "dedup_lines_rebuild",
-    # round-6 additions (suite total grows ~3-5 s — BASELINE.md round-6
-    # note): the capped segment near-dup shares dedup_lines_near's
-    # memoized seg/canon tables (marginal cost is the df-cap agg + its
-    # own band join); incremental dedup reuses the minhash signature
-    # memo; the two governance aggregates are single-scan.
-    "dedup_lines_near_capped",
-    "dedup_incremental",
-    "shard_plan",
-    "corpus_rebalance",
-    # round-7 additions (r6 verdict ask #5 — first perf anchors for the
-    # four round-6 ops that had none): fixed-bitmap Bloom screen,
-    # reverse decontamination report, packing histogram, and PMI
-    # collocation ranking (two vocab-bounded aggs + unigram joins).
-    "decontaminate_bloom",
-    "eval_leak_report",
-    "length_histogram",
-    "pmi_collocations",
-    # round-7 additions: rule battery + hashed classifier (zero-shuffle
-    # single scans), deterministic split accounting, cross-doc n-gram
-    # span report, and the two corpus embedding statistics.
-    "gopher_rules",
-    "quality_classifier",
-    "dataset_split",
-    "dedup_ngram_spans",
-    "corpus_diversity",
-    "kmeans_assign",
-    "ann_recall",
-    "embed_quantize",
-    # round-7 events-tier analytics
-    "funnel_conversion",
-    "cohort_retention",
-    # round-7: Lloyd iteration + score-weighted sampling + combined
-    # gate + IVF recall audit
-    "kmeans_refine",
-    "score_weighted_sample",
-    "quality_gate",
-    "ann_recall_ivf",
-    "corpus_drift",
-    # late round-7 additions: boilerplate screen + winnowing fingerprints
-    # (both ride the memoized segment/span-hash tables), zero-shuffle
-    # chunking, single-explode novelty monitor, BM25 top-k, and the
-    # cluster purity report (kmeans_assign's plan + K x |labels| windows)
-    "boilerplate_lines",
-    "winnow_fingerprint",
-    "doc_chunk",
-    "ngram_novelty",
-    "bm25_search",
-    "cluster_purity",
-    # second wave: LSH layout calibration (banded joins + the exact
-    # truth pass), exact-K per-group sampling, fertility report
-    "minhash_band_sweep",
-    "reservoir_sample",
-    "tokenizer_stats",
-    # third wave: source governance views over shared dedup machinery
-    "cross_source_leak",
-    "dup_cluster_sizes",
-    # fourth wave: lang-ID confusion audit + centroid-outlier report
-    # (embed_outliers adds a deliberate unpartitioned WindowExec WARN —
-    # the rank window runs over the ALREADY-LIMITED 20-row frame, the
-    # same window-above-aggregate class as lm_score/corpus_mix)
-    "lang_confusion",
-    "embed_outliers",
-    # fifth wave: events-tier anomaly screen + winnow pair detection
-    "event_rate_anomaly",
-    "winnow_neardup",
-    # sixth wave: PageRank over the leak graph (3 unrolled iterations
-    # over the |sources|-bounded edge table) + exact length percentiles
-    "source_pagerank",
-    "length_percentiles",
-    # seventh wave: estimator bias audit (band join + exact-Jaccard side)
-    "minhash_est_audit",
-    # eighth wave: the classic multi-join / correlated-subquery TPC-H
-    # shapes (Q4/Q7/Q8/Q9/Q13/Q15/Q2 flavors) — fact-fact shuffle joins
-    # under AQE with broadcast dims; expected ~0.3-1.5 s each at sf0.1
-    "order_priority_count",
-    "volume_shipping",
-    "market_share",
-    "product_profit",
-    "customer_distribution",
-    "top_supplier",
-    "min_cost_supplier",
-    # ninth wave: spectral + frequency-structure analysis — two
-    # power-iteration matvecs (4 keyed aggs over the exploded frame)
-    # and the |vocab|-bounded Zipf OLS
-    "embed_pca_power",
-    "zipf_fit",
-    # quality-aware keeper: rides the memoized near-dup pair/cluster
-    # machinery + one quality scan
-    "dedup_keeper_quality",
-    # tenth wave: governance — fused conditional-sum audits + the SCD2
-    # dimension merge (one dim scan, broadcast update batch)
-    "constraint_audit",
-    "scd2_apply",
-    "agg_delta_merge",
-    "k_anonymity",
-    # twelfth wave: the measurements behind two scale levers — key-skew
-    # stats (plain vs AQE vs salted join) and cross-split near-dup
-    # contamination (rides the memoized pair table)
-    "join_skew_stats",
-    "split_leak_check",
-    "dataset_split_by_cluster",
-    "embed_threshold_sweep",
-    "asset_dedup",
-    "markov_transitions",
-    "top_paths",
-    "erasure_plan",
-    "order_backlog",
-    "source_concentration",
-    "dedup_savings",
-    "embed_dedup_incremental",
-    "seasonality_profile",
-    "token_budget_plan",
-    "interval_merge",
-    "source_vocab_overlap",
-    # round-8 wave: contrastive hard-negative mining (sim_topk's
-    # WindowGroupLimit join-form with the label-mismatch predicate in
-    # the join), two more TPC-H shapes (Q17/Q22 flavors — Q10/Q18 were
-    # already covered by returned_items/big_orders), and the per-user
-    # inter-arrival profile (user-partitioned lag window)
-    "hard_negative_mining",
-    "small_qty_revenue",
-    "sales_opportunity",
-    "interarrival_stats",
-    # round-8: REAL stdlib container codecs (BMP writer/parser pair +
-    # wave-written WAV parsed by an independent RIFF chunk walker) and
-    # the temperature-sampling mixture plan (|sources|-row frame)
-    "asset_codec_meta",
-    "temperature_mix",
-    # round-9 wave: the remaining TPC-H archetypes (Q3/Q6/Q11/Q16/Q19/
-    # Q20/Q21) and the compressed-container codec tier (full PNG decode
-    # in pure stdlib — CRC walk + inflate + unfilter per document)
-    "shipping_priority",
-    "forecast_revenue",
-    "important_parts",
-    "parts_supplier_rel",
-    "discounted_revenue",
-    "promo_suppliers",
-    "waiting_suppliers",
-    "asset_png_meta",
-    # round-9 second wave: embedding-space drift (its unpartitioned
-    # window is over the K-row assignment histogram — the documented
-    # tiny-frame class) and the decode-validate asset screen
-    "embed_drift",
-    "asset_quality_screen",
-    # round-9 third wave: hybrid retrieval fusion, the privacy release
-    # pair, CRM quartile segmentation, and the K-selection elbow (its
-    # lag window is over the 4-row K frame — the tiny-frame class)
-    "hybrid_rrf",
-    "l_diversity",
-    "private_release",
-    "rfm_segments",
-    "kmeans_elbow",
-    # round-9 fourth wave: IVF calibration, BPE trainer statistic,
-    # attribution, and sketch join-size estimation
-    "ivf_probe_sweep",
-    "bpe_merge_candidates",
-    "attribution_revenue",
-    "cms_join_cardinality",
-    # round-9 fifth wave: cohort LTV, A/B readout, CUSUM, bootstrap
-    "ltv_curve",
-    "ab_test_report",
-    "cusum_changepoint",
-    "bootstrap_stderr",
-    # round-9 sixth wave: distinctive terms, basket lift, ranker eval,
-    # self-auditing histogram quantiles
-    "topic_keywords",
-    "basket_lift",
-    "retrieval_eval",
-    "histogram_quantiles",
-    # round-9 seventh wave: diversified retrieval + column profiler
-    "mmr_rerank",
-    "table_profile",
-    # round-9 eighth wave: weighted lexical near-dup + trend forecast
-    "dedup_tfidf_cosine",
-    "holt_forecast",
-    # round-9 ninth wave: experimentation/monitoring quartet
-    "cuped_ab_report",
-    "quantile_treatment_effect",
-    "drift_psi",
-    "auc_report",
-    # round-10 first wave: skyline, Benford, OLS trend, calibration,
-    # blocked entity resolution
-    "pareto_frontier",
-    "benford_digits",
-    "ols_trend",
-    "calibration_bins",
-    "er_part_names",
-    # round-10 waves 2-5: encoders/screens, graph census, codec tier,
-    # survival, sampling plan, control chart, contingency, zone maps.
-    # survival_curve adds one DELIBERATE unpartitioned window of the
-    # documented tiny-frame class (the at-risk cumulative sum over the
-    # |distinct durations| aggregate — order_backlog's shape).
-    "target_encode",
-    "woe_iv",
-    "mad_outliers",
-    "copurchase_triangles",
-    "asset_gif_meta",
-    "survival_curve",
-    "negative_sampling_plan",
-    "ewma_anomaly",
-    "chi2_independence",
-    "zonemap_prune_audit",
-    "winsorized_stats",
-    "mutual_information",
-    "bloom_join_audit",
-    # round-10 wave 7. ks_drift and gains_curve each add DELIBERATE
-    # unpartitioned windows of the documented tiny-frame class (their
-    # cumulative sums run over <=1000-row score-grid aggregates);
-    # survival_curve's is noted above.
-    "ks_drift",
-    "quantile_normalize",
-    "gains_curve",
-    # round-10 wave 8. seasonal_decompose's centered-MA and seasonal
-    # windows run over the |months| aggregate (tiny-frame class).
-    "seasonal_decompose",
-    "decayed_revenue",
-    "interp_quantiles",
-    # round-11 waves 1-2: label-noise audit, clustering validity,
-    # temporal holdout, conformal calibration, bandit readout.
-    # conformal_threshold and bandit_ucb add DELIBERATE unpartitioned
-    # windows of the documented tiny-frame class (the conformal CDF
-    # runs over the <=1e6-bounded distinct-score aggregate; the UCB
-    # total over the |arms|-row frame).
-    "label_noise_knn",
-    "silhouette_report",
-    "temporal_split",
-    "conformal_threshold",
-    "bandit_ucb",
-    # round-11 wave 3 (source_ablation/hill_tail_index add tiny-frame
-    # unpartitioned windows over |sources|- and K-row aggregates)
-    "source_ablation",
-    "hill_tail_index",
-    "forecast_backtest",
-    # round-11 wave 4
-    "mrl_truncation_audit",
-    "weighted_sample_ares",
-    # round-11 wave 5 (theil_sen's medians add two tiny-frame
-    # unpartitioned windows over the |months| and |months|^2 frames)
-    "theil_sen_trend",
-    "group_rare_collapse",
-    # round-11 wave 6 (permutation_test pays a fixed 64x map-side
-    # compute inflation by design; oov_rate's distinct-OOV-type agg
-    # shuffles at (source, word) distinct grain)
-    "permutation_test",
-    "spearman_corr",
-    "kfold_assign",
-    "oov_rate",
-    # round-11 wave 7 (fdr_bh's two tiny-frame unpartitioned windows run
-    # over the |event_type| cells; jl's 16 projection folds are per-row
-    # map work on a 512-pair audit frame)
-    "fdr_bh",
-    "jl_projection_audit",
-    # round-11 wave 8 (all three are vocab-bounded: word-grain partial
-    # combines, TakeOrdered head cuts, G-row grid windows)
-    "heaps_law_fit",
-    "term_burstiness",
-    "token_coverage_curve",
-    # round-11 wave 9 (brier rides the calibration probe's single scan;
-    # group_sequential's cumulative windows run over the |days| frame)
-    "brier_decomposition",
-    "group_sequential",
-    # round-11 wave 10 (power_mde is a pure cell aggregate; fisher's
-    # posexplode partial-combines to |labels| x |dims| cells)
-    "power_mde",
-    "fisher_separability",
-    # round-11 wave 11 (entropy_rate's bigram leg is slice+zip, not a
-    # per-position lambda — 10x measured; all three vocab-bounded)
-    "neyman_allocation",
-    "entropy_rate",
-    "good_turing_mass",
-    # round-11 wave 12 (both rank windows partition by event_type)
-    "mann_whitney",
-    "median_ci",
-    # round-11 wave 13 (effect sizes are a pure cell aggregate; ACF's
-    # lag join runs on the calendar-bounded month frame)
-    "effect_size_report",
-    "acf_monthly",
-    # round-11 wave 14 (both run on calendar-bounded frames)
-    "runs_test",
-    "sign_test",
-    # round-11 wave 15 (association summaries over bounded cell frames)
-    "kappa_agreement",
-    "cramers_v",
-    # round-11 wave 16 (a 1-row aggregate over the decomposition frame)
-    "seasonal_strength",
-    # round-12 full-catalog coverage (r11 VERDICT ask #4): the 82
-    # entries that were correctness-covered every round but never
-    # timed — mostly trivial scan/cast/scalar/set-op shapes, but a
-    # plan regression in any of them was invisible to the bench gate.
-    # From here on HEADLINE == the whole catalog (pinned by
-    # tests/test_bench_contract.py::test_headline_covers_catalog);
-    # every entry carries an anchor, so bench_compare adjudicates all.
-    "anti_join_customers",
-    "approx_distinct_users",
-    "approx_quantiles",
-    "array_fns",
-    "audio_features",
-    "big_orders",
-    "bigram_counts",
-    "bigram_lm_score",
-    "bpe_token_count",
-    "cms_token_freq",
-    "column_stats",
-    "corpus_mix",
-    "corpus_report",
-    "corr_text_embedding",
-    "count_by_currency",
-    "cube_sales",
-    "curation_funnel",
-    "date_fns2",
-    "dedup_cluster",
-    "dedup_containment",
-    "dedup_near_jaccard",
-    "dedup_simhash",
-    "deterministic_sample",
-    "distinct_users",
-    "except_users",
-    "explode_variants",
-    "filter_suspicious",
-    "filtered_agg",
-    "frame_sample",
-    "funnel_sweep",
-    "fx_convert",
-    "fx_join",
-    "grouped_map_norm",
-    "grouping_sets",
-    "image_resize",
-    "intersect_users",
-    "json_decode",
-    "json_encode",
-    "knn_classify",
-    "lang_id",
-    "late_shipments",
-    "lateral_topn",
-    "map_fns",
-    "moving_avg",
-    "multimodal_meta",
-    "null_fns",
-    "outer_join_nulls",
-    "pattern_counts",
-    "percentiles",
-    "pivot_status",
-    "project_cast",
-    "promo_revenue",
-    "quality_score",
-    "range_join_buckets",
-    "returned_items",
-    "rollup_sales",
-    "salted_join_events",
-    "scalar_fns",
-    "scalar_subquery",
-    "scan_events",
-    "scan_lines",
-    "semi_join_customers",
-    "semi_join_suspicious",
-    "seq_packing",
-    "sessionize_lag",
-    "sink_parquet",
-    "sliding_count",
-    "sql_top_customers",
-    "stratified_sample",
-    "string_fns2",
-    "text_normalize",
-    "tfidf",
-    "theta_join_parts",
-    "token_count",
-    "tokenize_explode",
-    "topk_words",
-    "udaf_median",
-    "union_payment_streams",
-    "unpivot_part",
-    "window_fns2",
-    "window_range_interval",
-    "word_variants",
-)
-
-
-# Two-tier protocol (round-8, BASELINE.md "bench tiers"): the full
-# headline (len(HEADLINE) queries — the WHOLE catalog since round 12)
-# takes ~230-240 s quiet at 287 entries;
-# `--headline-core` runs the long-lived comparable set (every entry
-# present since round 7's early waves — flagship pipeline through
-# pmi_collocations) for fast iteration. The round's final BENCH always
-# runs the full tier.
-_CORE_END = "pmi_collocations"
-HEADLINE_CORE = HEADLINE[: HEADLINE.index(_CORE_END) + 1]
 
 
 def _read_load1() -> float:
@@ -606,8 +160,6 @@ def timed_loop(spark, qs, names, sf_dir) -> tuple[dict[str, float], float]:
 
 
 def main() -> None:
-    core = "--headline-core" in sys.argv[1:]
-    names = HEADLINE_CORE if core else HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -625,8 +177,9 @@ def main() -> None:
     )
 
     qs = catalog.queries()
+    names = list(qs)
 
-    # Steady-state warmup (JMH-style): run the full headline once at the
+    # Steady-state warmup (JMH-style): run the whole suite once at the
     # smallest SF so every expression/codegen/shuffle path is JIT'd, then
     # time at the target SF. Cold-JVM first-touch costs (~1.5 s/query
     # measured) are session amortization, not operator throughput. The
@@ -647,7 +200,6 @@ def main() -> None:
     # tail-capture buffer, so the tail started mid-line (r7 verdict
     # ask #2). The LAST line below is bounded (top-10 slowest only) and
     # always fits.
-    tier = "core" if core else "full"
     gate["steal_pct_at_end"] = _steal_pct()
     full = {
         "metric": "suite_seconds_full_map",
@@ -655,24 +207,18 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "n_queries": len(names),
-        "tier": tier,
+        "tier": "full",
         "sf": sf,
         "load_gate": gate,
     }
     print(json.dumps(full))
     cpus = cpu_count()
     try:
-        # core runs persist to their OWN file: a --headline-core
-        # iteration must never clobber the committed full-suite
-        # adjudication artifact bench_full_latest.json. Additionally
-        # (r17 VERDICT ask #2) every run persists a per-core-count copy
-        # (bench_{tier}_c{cpus}.json) so the driver's low-core scaling
-        # run cannot clobber the 32-core adjudication map.
+        # Every run also persists a per-core-count copy
+        # (bench_full_c{cpus}.json), so a low-core scaling run cannot
+        # clobber another host's adjudication map.
         here = os.path.dirname(os.path.abspath(__file__))
-        for fname in (
-            f"bench_{tier}_latest.json",
-            f"bench_{tier}_c{cpus}.json",
-        ):
+        for fname in ("bench_full_latest.json", f"bench_full_c{cpus}.json"):
             with open(os.path.join(here, fname), "w") as f:
                 json.dump(full, f, indent=1, sort_keys=True)
     except OSError:
@@ -689,8 +235,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": {k: round(v, 2) for k, v in top10.items()},
                 "n_queries": len(names),
-                "tier": tier,
-                "full_map": f"bench_{tier}_c{cpus}.json",
+                "tier": "full",
+                "full_map": f"bench_full_c{cpus}.json",
                 "sf": sf,
                 "load_gate": gate,
             }

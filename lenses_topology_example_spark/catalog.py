@@ -50,15 +50,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # snapshots the critical confs around the threaded build and fails the
 # run if a builder left them changed.
 #
-# The round driver evaluates only the FIRST 50 entries for its
-# CORRECTNESS report (round-1 finding — the whole training-data tier
-# once sat past position 50 with no external verdict). Since round 8
-# the DRIVER_WINDOW tuple below is the source of truth for that slice —
-# the catalog reorders itself from it, so the literal registration
-# order here is historical and irrelevant to driver coverage. Entries
-# outside the window keep full pytest oracle-parity coverage on every
-# run (tests/test_oracle_parity.py). Round-by-round rotation history:
-# ROTATION.md (moved there per r8 VERDICT ask #7).
+# Registration order below is historical: the DRIVER_WINDOW tuple after
+# the literal decides the first 50 entries (see there).
 _CATALOG: dict[str, tuple[QueryFn, str | None]] = {
     # dedup tier: never-driven round-6/7 additions (first drive) + the
     # once/twice-verified segment-grain entries due re-checks
@@ -937,56 +930,12 @@ _CATALOG: dict[str, tuple[QueryFn, str | None]] = {
     ),
 }
 
-# The driver evaluates only the first DRIVER_WINDOW_SIZE catalog entries
-# for its CORRECTNESS report. The window is an explicit LITERAL list
-# (round-2 ADVICE): a future insertion can't silently reshuffle which
-# queries get driver-checked. Since round 8 this tuple is the SOURCE OF
-# TRUTH: _CATALOG is reordered below so the window entries become exactly
-# the first 50 registrations — a rotation is one deliberate edit of this
-# tuple (tests/test_catalog.py::test_driver_window_is_pinned pins size
-# and first-50 order). Full rotation history: ROTATION.md (r8 VERDICT
-# ask #7 — only the CURRENT window and the NEXT plan live here).
-#
-# ROUND-16 WINDOW (executes the plan written in round 15, catalog r15
-# comment + `python tools/rotation_plan.py 16` — head detection fired
-# exactly as the r15 VERDICT predicted: the four entries whose
-# contracts changed AFTER the r15 window write, nothing else;
-# CORRECTNESS_r15 was 50/50 green so there are no reds to hold):
-#   Slots 1-4:   HEAD, all fingerprint-auto-detected contract changes
-#     from round 15: basket_lift (relational2.py — memo-persisted
-#     shared basket frame; r16 also moved its construction into the
-#     one shared helper order_part_distinct(), r15 ADVICE),
-#     dedup_tfidf_cosine (dedup.py — weighted-index memo-persist),
-#     copurchase_triangles (analytics.py — edge-frame memo-persist +
-#     shared basket helper), theil_sen_trend (analytics.py — NULL-
-#     ordering isNotNull pushdown from the nulls90 sweep).
-#   Slots 5-24:  RISK-TIER entries with latest verdict r12 (3+ rounds
-#     old at r16), name order: the 20 r12-latest libm/md5/decimal/dsum
-#     entries (bigram_lm_score .. token_entropy).
-#   Slots 25-50: plain queue, r9-latest block remainder, name order
-#     (dedup_near_capped .. sim_topk). sim_topk's docstring gained the
-#     honest broadcast bound this round (r15 VERDICT ask #5) — the
-#     edit landed BEFORE the fingerprint snapshot refresh, so it does
-#     not re-head in r17.
-#   OUT: the 50 green r15 window members (each leaves with a current
-#   r15 verdict; pytest oracle parity at sf0.001 still covers every
-#   rotated-out entry on every run).
-#
-# NOTE on the round-15 fingerprint-algorithm change (reworded per r15
-# ADVICE — the earlier note overstated it): the tokenize-based comment
-# stripper changed the hash only where the old '#'-split mis-stripped
-# (28 of 287 snapshot entries, e.g. '#' inside string literals); the
-# snapshot was refreshed with the new algorithm at the r15 window
-# write, so r16 head detection diffed new-vs-new as usual and found
-# exactly the four real contract changes above.
-#
-# ROUND-17 ROTATION PLAN: run `python tools/rotation_plan.py 17` once
-# CORRECTNESS_r16 lands. Expected shape (if r16 goes green): head =
-# fingerprint diffs only (r16 in-round edits after this window write);
-# then risk tier <= r13; then the plain queue continues with the 7
-# remaining r9-latest entries (tokenize_explode, topk_spenders,
-# tumbling_count, union_payment_streams, waiting_suppliers,
-# window_running, wordcount) and the r10 block.
+# The external driver evaluates only the first DRIVER_WINDOW_SIZE catalog
+# entries. DRIVER_WINDOW is that slice: _CATALOG is reordered below so
+# these names come first, in this order. Editing the window is a reviewed
+# change to this literal (tests/test_catalog.py pins size and order);
+# pytest checks all 287 entries against their oracles on every run
+# (tests/test_oracle_parity.py), in or out of the window.
 DRIVER_WINDOW_SIZE = 50
 DRIVER_WINDOW: tuple[str, ...] = (
     # head: the 4 r15 contract changes awaiting a verdict

@@ -63,9 +63,9 @@ _FLOAT_LANDING_INT_TYPES = {"HUGEINT", "UHUGEINT", "UBIGINT", "UINTEGER"}
 
 def test_all_oracles_emit_driver_hashable_types(sf_dir):
     """Static driver-hash safety for EVERY oracle (catalog-wide since
-    round 15 — every entry rotates into the window eventually, so
-    catching the class at registration beats catching it at rotation
-    time; verified 0 violations across all 287 before widening): no
+    round 15 — any entry can be moved into DRIVER_WINDOW by a one-line
+    edit, so the class is caught at registration, not when the window
+    changes; verified 0 violations across all 287 before widening): no
     HUGEINT/unsigned OUTPUT column (dtype mismatch class) and no
     LIST/STRUCT/MAP output (the driver canon crashes on unhashable
     numpy arrays — round-1 map_fns, round-2 approx_quantiles).
@@ -88,8 +88,8 @@ def test_all_oracles_emit_driver_hashable_types(sf_dir):
 
 def test_all_queries_emit_scalar_columns(catalog_dfs, spark, sf_dir):
     """Spark-side twin of the oracle type guard (catalog-wide since
-    round 15, same rationale — every entry rotates into the window
-    eventually): no catalog query may
+    round 15, same rationale — any entry can be moved into the
+    window): no catalog query may
     return an array/map/struct column — the driver comparator cannot
     canonicalize them (`unhashable type: numpy.ndarray`) — nor a
     DECIMAL column (round 15, r14 VERDICT ask #1: Spark toPandas lands

@@ -2,15 +2,10 @@
 """Adjudicate a bench run against the recorded anchors.
 
 Usage:
-    python tools/bench_compare.py [bench_full_latest.json]
+    python tools/bench_compare.py [BENCH_JSON]
 
-SAMPLE OF RECORD (r10 VERDICT ask #3): without an explicit path, this
-tool adjudicates the newest committed `bench_quiet_r*.json` — the
-builder's quiet close sample, written under a name the external
-driver never touches — and only falls back to `bench_full_latest.json`
-(which the driver's close bench OVERWRITES, twice now under documented
-host load) when no quiet sample exists. Pass a path to adjudicate any
-other run.
+Without a path this adjudicates `bench_full_latest.json`, the map the
+last `python bench.py` wrote. Pass a path to adjudicate any other run.
 
 Compares every query against bench_anchors.json minimums. Prints one
 line per flagged query (ratio > BAR x anchor) and a summary line; exit
@@ -21,7 +16,7 @@ noise phases during which individual in-suite readings run 3-9x their
 quiet minimums with unchanged plans (measured and adjudicated in
 BASELINE.md round 8 — kmeans_refine read 5.6 s in-suite, 1.3 s
 isolated). The adjudication protocol is: rerun every flagged query
-with `python tools/iso_bench.py <name> ...` (fresh JVM, warmup, n=3)
+with `python tools/profile_query.py <name> ...` (fresh JVM, warmup, n=3)
 and only an ISOLATED reading above the bar is a regression.
 
 Shared memo builds are timed as their own `memo:<key>` rows (bench.py),
@@ -33,12 +28,11 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 # 3.0 is the TRIAGE TRIP-WIRE, not the target: the written bar of
 # record (BASELINE.md "The bar, in one sentence") is 2x-anchor as the
-# performance target, 3x as the flag that forces the iso_bench rerun,
+# performance target, 3x as the flag that forces the profile_query rerun,
 # and only an ISOLATED minimum above 2x is a regression. Keep this
 # number and that sentence in sync.
 BAR = 3.0
@@ -46,27 +40,11 @@ BAR = 3.0
 
 def main() -> int:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if len(sys.argv) > 1:
-        bench_path = sys.argv[1]
-    else:
-        import glob
-
-        # Sort numerically on the round number — a lexicographic sort
-        # misorders mixed digit counts (bench_quiet_r9 > bench_quiet_r11)
-        # and would silently adjudicate a stale sample (r11 ADVICE).
-        def _round_no(path: str) -> int:
-            m = re.search(r"bench_quiet_r(\d+)\.json$", path)
-            return int(m.group(1)) if m else -1
-
-        quiet = sorted(
-            glob.glob(os.path.join(root, "bench_quiet_r*.json")),
-            key=_round_no,
-        )
-        bench_path = (
-            quiet[-1]
-            if quiet
-            else os.path.join(root, "bench_full_latest.json")
-        )
+    bench_path = (
+        sys.argv[1]
+        if len(sys.argv) > 1
+        else os.path.join(root, "bench_full_latest.json")
+    )
     print(f"sample of record: {os.path.basename(bench_path)}")
     bench = json.load(open(bench_path))
     if bench.get("tier", "full") != "full":
