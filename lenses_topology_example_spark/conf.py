@@ -11,7 +11,8 @@ runtime, at every contract entry point:
   dtype, so either layout works.
 - UTC session timezone: event-time semantics must not depend on the host
   timezone (and the DuckDB oracle compares naive-UTC timestamps).
-- Arrow: keeps any mapInPandas path on the columnar transfer.
+- Arrow: governs ``toPandas`` and ``createDataFrame`` of a pandas frame.
+  mapInPandas always moves Arrow batches, whatever this conf says.
 
 All three are runtime-settable SQL confs (no JVM restart needed).
 """

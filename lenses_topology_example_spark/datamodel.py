@@ -15,6 +15,7 @@ Reference citations (all under /root/reference/):
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -65,6 +66,46 @@ CORPUS_LINES = (
 )
 
 
+def literal_df(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A constant frame of Python ``rows`` typed by ``schema`` (a DDL
+    string such as ``"q string, n bigint"``, or a StructType).
+
+    It plans as a JVM ``LocalRelation``: collecting it runs no Spark job
+    and joining it starts no Python worker. ``spark.createDataFrame`` of
+    a local list instead plans a pickled Python RDD (``Scan
+    ExistingRDD``), whose first scan forks a second Python daemon and
+    worker set next to the mapInPandas one.
+
+    Each value is bound as a named SQL parameter and cast to its field's
+    type, so strings need no quoting and decimals, NULLs and bigints
+    keep their exact values. (Positional ``?`` parameters bind out of
+    order inside ``VALUES``.) ``VALUES`` needs at least one row: a
+    trailing typed all-NULL row, cut off by ``LIMIT``, gives the empty
+    frame and makes every column nullable, as a DDL schema says.
+    """
+    if not isinstance(schema, T.StructType):
+        schema = T.StructType.fromDDL(schema)
+    types = [f.dataType.simpleString() for f in schema]
+    args: dict[str, object] = {}
+    tuples = []
+    for row in rows:
+        cells = []
+        for t, v in zip(types, row, strict=True):
+            name = f"p{len(args)}"
+            args[name] = v
+            cells.append(f"CAST(:{name} AS {t})")
+        tuples.append(f"({', '.join(cells)})")
+    n = len(tuples)
+    tuples.append(f"({', '.join(f'CAST(NULL AS {t})' for t in types)})")
+    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in schema)
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names}) LIMIT {n}",
+        args=args,
+    )
+
+
 def currency_rates_df(spark: SparkSession) -> DataFrame:
     """The 5-row FX dimension as a DataFrame.
 
@@ -81,20 +122,18 @@ def currency_rates_df(spark: SparkSession) -> DataFrame:
     casts to DECIMAL(38,6) only at aggregation boundaries, where decimal
     summation gives order-independent exact results at any parallelism.
     """
-    # Built via SQL VALUES -> a JVM-side LocalRelation: broadcasting it
-    # never touches the Python-RDD slow path (createDataFrame from local
-    # rows plans as Scan ExistingRDD over a pickled RDD).
-    rows = ", ".join(
-        f"('{c}', CAST('{float(r)!r}' AS DOUBLE))" for c, r in CURRENCY_RATES.items()
-    )
-    return spark.sql(
-        f"SELECT col1 AS currency, col2 AS rate FROM VALUES {rows}"
+    # literal_df: a JVM LocalRelation, so broadcasting or collecting it
+    # never touches a Python RDD.
+    return literal_df(
+        spark,
+        [(c, float(r)) for c, r in CURRENCY_RATES.items()],
+        "currency string, rate double",
     )
 
 
 def corpus_df(spark: SparkSession) -> DataFrame:
     """The 15-line word-count corpus as a single-column DataFrame."""
-    return spark.createDataFrame([(l,) for l in CORPUS_LINES], "value string")
+    return literal_df(spark, [(l,) for l in CORPUS_LINES], "value string")
 
 
 def currency_for(expr: F.Column) -> F.Column:

@@ -39,6 +39,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..datamodel import literal_df
 from ..memo import cached
 from .similarity import cosine_prenorm, emb_base
 from .text import (
@@ -73,8 +74,8 @@ def sem_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "v", F.col("norm").alias("nrm"))
             .filter(F.col("nrm") > F.lit(0.0))
         )
-        qmap = spark.createDataFrame(
-            list(HYBRID_QUERY_VECS), "query_id string, qvec_id long"
+        qmap = literal_df(
+            spark, HYBRID_QUERY_VECS, "query_id string, qvec_id long"
         )
         qvec = qmap.join(
             emb.select(
@@ -250,8 +251,8 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = emb_base(spark, sf_dir).select(
         "vec_id", "v", "label", F.col("norm").alias("nrm")
     )
-    qmap = spark.createDataFrame(
-        list(HYBRID_QUERY_VECS), "query_id string, qvec_id long"
+    qmap = literal_df(
+        spark, HYBRID_QUERY_VECS, "query_id string, qvec_id long"
     )
     # all three ranker arms read the shared memo-persisted ranking
     # frames (r17): the cosine arm and the rrf arm's semantic leg both
@@ -482,8 +483,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "v", F.col("norm").alias("nrm"))
             .filter(F.col("nrm") > F.lit(0.0))
         )
-        qmap = spark.createDataFrame(
-            list(HYBRID_QUERY_VECS), "query_id string, qvec_id long"
+        qmap = literal_df(
+            spark, HYBRID_QUERY_VECS, "query_id string, qvec_id long"
         )
         qvec = qmap.join(
             emb.select(

@@ -28,6 +28,7 @@ import pandas as pd  # module-level: pandas_udf resolves stringified hints here
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..datamodel import literal_df
 from ..memo import cached
 from ..tables import load_table
 
@@ -1019,9 +1020,7 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = binned.withColumn("cum", F.sum("c").over(wb)).withColumn(
         "cum_prev", F.col("cum") - F.col("c")
     )
-    pcts = spark.createDataFrame(
-        [(p,) for p in HIST_PCTS], "pct int"
-    )
+    pcts = literal_df(spark, [(p,) for p in HIST_PCTS], "pct int")
     targets = rng.crossJoin(F.broadcast(pcts)).select(
         "event_type",
         "lo",

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from ..datamodel import literal_df
 from ..functions.texthash import (
     SQL_MD5_HASH64,
     polynomial_fingerprint,
@@ -2139,7 +2140,8 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _doc_tokens
 
     all_terms = sorted({t for _, ts in BM25_QUERIES for t in ts})
-    qmap = spark.createDataFrame(
+    qmap = literal_df(
+        spark,
         [(q, t) for q, ts in BM25_QUERIES for t in ts],
         "query_id string, token string",
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tables import load_table
-from ..datamodel import CURRENCY_FOR_SQL, currency_for
+from ..datamodel import CURRENCY_FOR_SQL, currency_for, literal_df
 
 # --- time-window aggregations ------------------------------------------------
 
@@ -142,14 +142,9 @@ def _rate_changes() -> list[tuple[str, str, float]]:
 
 
 def rate_changes_df(spark: SparkSession) -> DataFrame:
-    # SQL VALUES -> JVM LocalRelation (no Python-RDD scan; see
-    # datamodel.currency_rates_df).
-    rows = ", ".join(
-        f"('{c}', TIMESTAMP '{t}', CAST('{r!r}' AS DOUBLE))"
-        for c, t, r in _rate_changes()
-    )
-    return spark.sql(
-        f"SELECT col1 AS currency, col2 AS rate_ts, col3 AS rate FROM VALUES {rows}"
+    # datamodel.literal_df: a JVM LocalRelation, no Python-RDD scan.
+    return literal_df(
+        spark, _rate_changes(), "currency string, rate_ts timestamp, rate double"
     )
 
 
@@ -1624,9 +1619,7 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted = packed.filter(F.size("h") >= 1).select(
         "last_m", fold.alias("f")
     )
-    hs = spark.createDataFrame(
-        [(h,) for h in range(1, HOLT_HORIZON + 1)], "h int"
-    )
+    hs = literal_df(spark, [(h,) for h in range(1, HOLT_HORIZON + 1)], "h int")
     return (
         fitted.crossJoin(F.broadcast(hs))
         .select(
@@ -2867,9 +2860,7 @@ def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = monthly.agg(
         F.array_sort(F.collect_list(F.struct("m", "x"))).alias("h")
     )
-    offs = spark.createDataFrame(
-        [(o,) for o in range(1, BT_CUTOFFS + 1)], "o int"
-    )
+    offs = literal_df(spark, [(o,) for o in range(1, BT_CUTOFFS + 1)], "o int")
     rows = (
         packed.crossJoin(F.broadcast(offs))
         .select(

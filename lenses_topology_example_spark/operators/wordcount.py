@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..datamodel import CORPUS_LINES
+from ..datamodel import CORPUS_LINES, literal_df
 from ..tables import load_table
 
 # kstreams App.java:102 — lowercase, split on non-word runs.
@@ -79,15 +79,9 @@ SQL_WORDCOUNT = rf"""
 
 def q_scan_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: the fixed 15-line corpus source (sparkstreaming App.java:99-115;
-    identical in kstreams/akkastreams). VALUES -> JVM LocalRelation, keyed
-    by line_no for a stable compare."""
-    rows = ", ".join(
-        f"({i}, '" + line.replace("'", "''") + "')"
-        for i, line in enumerate(CORPUS_LINES)
-    )
-    return spark.sql(
-        f"SELECT col1 AS line_no, col2 AS line FROM VALUES {rows}"
-    )
+    identical in kstreams/akkastreams) as a JVM LocalRelation
+    (datamodel.literal_df), keyed by line_no for a stable compare."""
+    return literal_df(spark, enumerate(CORPUS_LINES), "line_no int, line string")
 
 
 SQL_SCAN_LINES = (

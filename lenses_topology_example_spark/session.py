@@ -9,8 +9,9 @@ cluster reading ~100 TB:
 - ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
   real cluster AQE's coalescing makes the initial number a ceiling, not a
   tuning knob.
-- Arrow enabled so any Pandas-UDF fallback paths move data in columnar
-  batches instead of pickled rows.
+- Arrow enabled so ``toPandas`` and ``createDataFrame`` of a pandas
+  frame move columnar batches instead of pickled rows (mapInPandas
+  always does).
 - Session timezone pinned to UTC so event-time semantics are stable across
   drivers/executors (and match the DuckDB oracle used in tests).
 - Broadcast threshold left at default 10 MB; operators that KNOW a side is

@@ -38,7 +38,7 @@ from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..datamodel import SUSPICIOUS_THRESHOLD, currency_rates_df
+from ..datamodel import SUSPICIOUS_THRESHOLD, currency_rates_df, literal_df
 from ..operators.wordcount import tokens_col
 
 
@@ -1671,7 +1671,7 @@ def start_bandit_stream(
                 f"{out_path}/state/batch_id={batch_id - 1}"
             )
         else:
-            prev = spark.createDataFrame([], BANDIT_COUNT_SCHEMA)
+            prev = literal_df(spark, [], BANDIT_COUNT_SCHEMA)
         counts, report = bandit_ucb_batch(batch, prev)
         counts.write.mode("overwrite").parquet(
             f"{out_path}/state/batch_id={batch_id}"
@@ -1741,7 +1741,7 @@ def start_conformal_stream(
                 f"{out_path}/state/batch_id={batch_id - 1}"
             )
         else:
-            prev = spark.createDataFrame([], CONF_CELL_SCHEMA)
+            prev = literal_df(spark, [], CONF_CELL_SCHEMA)
         cells, report = conformal_batch(batch, prev)
         cells.write.mode("overwrite").parquet(
             f"{out_path}/state/batch_id={batch_id}"
@@ -1910,7 +1910,7 @@ def start_gs_stream(
                 f"{out_path}/state/batch_id={batch_id - 1}"
             )
         else:
-            prev = spark.createDataFrame([], GS_MOMENT_SCHEMA)
+            prev = literal_df(spark, [], GS_MOMENT_SCHEMA)
         moments, report = gs_batch(batch, prev, n_planned)
         moments.write.mode("overwrite").parquet(
             f"{out_path}/state/batch_id={batch_id}"

@@ -7,10 +7,14 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import uuid
+from decimal import Decimal
 
 import pytest
+from pyspark.sql.types import StructType
 
 from lenses_topology_example_spark.catalog import _CATALOG
+from lenses_topology_example_spark.datamodel import literal_df
 
 
 def _formatted_plan(spark, sf_dir, name: str) -> str:
@@ -60,10 +64,37 @@ def test_wordcount_is_native_explode(spark, sf_dir):
     assert "MapElements" not in plan
 
 
-def test_no_python_udfs_in_oracle_tier(catalog_dfs):
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _scans_python_rdd(jplan) -> bool:
+    """True when a ``LogicalRDD`` under the optimized plan ``jplan`` (its
+    subqueries and the plans of cached frames included) reads an RDD
+    whose lineage holds a ``PythonRDD``: rows pickled by Python, as
+    ``spark.createDataFrame(<list>)`` plans them. The
+    ``localCheckpoint`` relations of ``resolve_clusters`` hold JVM rows
+    and pass."""
+    todo = [jplan]
+    while todo:
+        plan = todo.pop()
+        todo.extend(_seq(plan.subqueriesAll()))
+        for leaf in _seq(plan.collectLeaves()):
+            kind = leaf.getClass().getSimpleName()
+            if kind == "InMemoryRelation":
+                todo.append(leaf.cacheBuilder().logicalPlan())
+            elif kind == "LogicalRDD" and "PythonRDD" in leaf.rdd().toDebugString():
+                return True
+    return False
+
+
+def test_no_python_udfs_in_oracle_tier(spark, sf_dir, catalog_dfs):
     """Every oracle-checked query except the multimodal decode plumbing
     must plan without Python evaluation (BatchEvalPython/ArrowEvalPython/
-    MapInPandas) — the hot path stays JVM-side."""
+    MapInPandas) — the hot path stays JVM-side. No entry, the sink
+    included, scans rows pickled through a Python RDD either: constant
+    frames are LocalRelations (datamodel.literal_df), so a session runs
+    one Python worker pool, the mapInPandas one."""
     python_ok = {
         "image_features",
         "audio_features",
@@ -85,12 +116,19 @@ def test_no_python_udfs_in_oracle_tier(catalog_dfs):
     # nested-loop joins — a CartesianProduct means a join lost its keys
     # or a broadcast hint fell off, which at corpus scale is a job that
     # never finishes.
+    dfs = dict(catalog_dfs)
+    dfs["sink_parquet"] = _CATALOG["sink_parquet"][0](spark, sf_dir)
     py_offenders = []
     cart_offenders = []
+    rdd_offenders = [
+        name
+        for name, df in dfs.items()
+        if _scans_python_rdd(df._jdf.queryExecution().optimizedPlan())
+    ]
     for name, (fn, sql) in _CATALOG.items():
-        if sql is None or name not in catalog_dfs:
+        if sql is None or name not in dfs:
             continue
-        df = catalog_dfs[name]
+        df = dfs[name]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -103,6 +141,40 @@ def test_no_python_udfs_in_oracle_tier(catalog_dfs):
             cart_offenders.append(name)
     assert not py_offenders, f"Python in the hot path of: {py_offenders}"
     assert not cart_offenders, f"CartesianProduct planned in: {cart_offenders}"
+    assert not rdd_offenders, f"Python-RDD row scans in: {sorted(rdd_offenders)}"
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        (
+            [
+                ("it's", 2**31 + 7, Decimal("1" * 36 + ".25"), None, 1.5),
+                ("", -(2**40), Decimal("-0.01"), 7, -2.25),
+            ],
+            "s string, b bigint, d decimal(38,2), i int, x double",
+        ),
+        ([], "s string, b bigint"),
+    ],
+    ids=["mixed", "empty"],
+)
+def test_literal_df_is_a_job_free_local_relation(spark, rows, ddl):
+    """literal_df is a typed JVM LocalRelation: exact values, the DDL's
+    schema, and a collect that launches no Spark job (convert_payments
+    collects the FX dimension at plan build and relies on that)."""
+    df = literal_df(spark, rows, ddl)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert df.schema == StructType.fromDDL(ddl)
+    sc = spark.sparkContext
+    group = f"literal_df-{uuid.uuid4()}"
+    sc.setJobGroup(group, "literal_df collect")
+    try:
+        got = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [tuple(r) for r in got] == rows
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
