@@ -1,57 +1,67 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs every catalog entry, in catalog order, at
+"""Benchmark harness: times catalog entries through the noop sink at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS].
+local[$SPARK_GRAFT_CPUS], after an untimed warm-up of the same entries
+at the sf0.001 slice (warm_dir()).
 Driver heap: $SPARK_GRAFT_DRIVER_MEM (default: half of MemAvailable,
 capped at 32g at sf<=0.5 and 64g above — see session.default_heap()).
 
-Output contract (round-8 revision — BENCH_r07 came back unparseable
-because the 103-query map on the final line overflowed the driver's
-tail-capture buffer):
+Usage:
+    python bench.py [--runs N]                   # every catalog entry, tier "full"
+    python bench.py NAME [NAME ...] [--runs N]   # named entries, tier "named"
+
+Output contract:
   * an EARLY line `{"metric": "suite_seconds_full_map", ...}` with the
-    complete per-query map, also persisted to ./bench_full_latest.json;
-  * the LAST line is compact and always fits:
+    complete map of rows, also persisted to a file;
+  * the LAST line is compact and always fits a log tail:
     {"metric": "suite_seconds", "value": N, "unit": "sec",
      "queries": {<top-10 slowest>: sec}, "n_queries": K,
-     "tier": "full", "full_map": "bench_full_c{cpus}.json", "sf": 0.1}
+     "tier": T, "full_map": F, "sf": S, "load_gate": {...}}
+
+A plain run has tier "full" and writes bench_full_latest.json and
+bench_full_c{cpus}.json next to this script. A named run has tier
+"named", writes bench_named_latest.json only, and before the two lines
+prints `NAME runR: build=… exec=… jobs= stages= tasks=` per entry and
+run, the counts taken from the entry's job group.
+
+Rows: each entry is timed `--runs` times (default 1) and its row is the
+MIN over the runs. Memo builds (memo.py) are timed as their own
+`memo:<key>` rows, from the run that builds them, not inside the entry
+that first needs them (timed_loop()). "value" is the sum of the rows.
 
 Each query is forced through the noop sink (full plan execution, zero
 result-materialization overhead on the driver) — the number measures the
 engine, not toPandas().
 
-Memo builds (memo.py) are timed as their own `memo:<key>` rows, not
-inside the entry that first needs them (see timed_loop()).
-
 Expected log noise: Spark prints `WindowExec: No Partition Defined ...
 may cause serious performance degradation` for every unpartitioned
 window. The surviving ones are DELIBERATE and tiny — they run over
-ALREADY-AGGREGATED frames, never the raw corpus: lm_score's global token
-total (|V| rows, text.py q_lm_score) and corpus_mix's global-share
-denominator (#sources x #langs rows, text.py q_corpus_mix); both shapes
-are pinned window-above-aggregate by tests/test_plans.py. Round-7 adds
-more of the same deliberate tiny-frame class: zipf_fit's rank over the
-200-row head, top_supplier's max over the |suppliers| aggregate,
+already-aggregated or SF-invariant frames, never the raw corpus:
+lm_score's global token total (|V| rows), corpus_mix's global-share
+denominator (#sources x #langs rows), zipf_fit's rank over the 200-row
+head, top_supplier's max over the |suppliers| aggregate,
 join_skew_stats' cumulative count over the |distinct df| histogram,
-order_backlog's running sum over the |days| frame, and
-source_concentration's rank over |sources| rows. Round-13 adds
-theta_join_parts' TWO cumulative-sum windows over the ~120k-cell
-SF-INVARIANT part-price cent grid (the CDF rewrite that replaced the
-measured-quadratic BNL join — bounded by the price RANGE, not the row
-count). Do not
-re-investigate these warnings; a NEW one appearing here means a
-corpus-scale window crept in (cms_token_freq's top-N was exactly that
-bug in round 4 — now TakeOrderedAndProject, plan-pinned window-free).
+order_backlog's running sum over the |days| frame,
+source_concentration's rank over |sources| rows, and theta_join_parts'
+two cumulative-sum windows over the ~120k-cell part-price cent grid
+(bounded by the price range, not the row count). The lm_score and
+corpus_mix shapes are pinned window-above-aggregate by
+tests/test_plans.py. Do not re-investigate these warnings; a NEW one
+means a corpus-scale window crept in (cms_token_freq's top-N was one,
+now a window-free TakeOrderedAndProject).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from lenses_topology_example_spark import catalog, memo
 from lenses_topology_example_spark.session import (
@@ -130,7 +140,30 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def timed_loop(spark, qs, names, sf_dir) -> tuple[dict[str, float], float]:
+def warm_dir(sf_dir: str) -> str | None:
+    """The JIT warm-up slice for a run at ``sf_dir``: the sf0.001 slice
+    next to DEFAULT_SF_DIR, or None when ``sf_dir`` is that slice."""
+    warm = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    return None if os.path.realpath(sf_dir) == os.path.realpath(warm) else warm
+
+
+def _job_counts(sc, group: str, before: set) -> str:
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(group)) - before
+    stages = [
+        si
+        for j in jobs
+        if (ji := tracker.getJobInfo(j)) is not None
+        for sid in ji.stageIds
+        if (si := tracker.getStageInfo(sid)) is not None
+    ]
+    tasks = sum(si.numTasks for si in stages)
+    return f"jobs={len(jobs)} stages={len(stages)} tasks={tasks}"
+
+
+def timed_loop(
+    spark, qs, names, sf_dir, run: int | None = None
+) -> tuple[dict[str, float], float]:
     """Run each entry in ``names`` through the noop sink; return the
     per-row seconds and the loop's wall time.
 
@@ -138,31 +171,131 @@ def timed_loop(spark, qs, names, sf_dir) -> tuple[dict[str, float], float]:
     ``memo:<key>`` row, placed before the entry's row: its self time
     (memo.py) plus the noop write that materializes a cached frame
     (loader frames hold no data, so they are not written). The entry's
-    row is its wall time minus those rows, so every row carries only
-    its own work and the rows sum to the loop's wall time."""
+    row is its build (construction less the memo self times) plus its
+    execution, so every row carries only its own work and the rows sum
+    to the loop's wall time, less the per-entry bookkeeping.
+
+    Each entry's jobs run in the job group ``name``. With ``run`` set,
+    one line ``NAME run<run>: build= exec= jobs= stages= tasks=`` is
+    printed per entry, the counts being the execution's jobs."""
+    sc = spark.sparkContext
     rows: dict[str, float] = {}
     t_loop = time.perf_counter()
     for name in names:
+        sc.setJobGroup(name, name)
         t0 = time.perf_counter()
         with memo.recording() as builds:
             df = qs[name](spark, sf_dir)
-        built = 0.0
+        build_s = time.perf_counter() - t0 - sum(s for _, _, s in builds)
         for key, frame, self_s in builds:
             t1 = time.perf_counter()
             if frame.is_cached:
                 _noop(frame)
             rows[f"memo:{key}"] = self_s + time.perf_counter() - t1
-            built += rows[f"memo:{key}"]
+        if run is not None:
+            before = set(sc.statusTracker().getJobIdsForGroup(name))
+        t1 = time.perf_counter()
         _noop(df)
-        rows[name] = time.perf_counter() - t0 - built
+        exec_s = time.perf_counter() - t1
+        rows[name] = build_s + exec_s
+        if run is not None:
+            print(
+                f"{name} run{run}: build={build_s:.3f}s exec={exec_s:.3f}s "
+                + _job_counts(sc, name, before),
+                flush=True,
+            )
+    sc.setLocalProperty("spark.jobGroup.id", None)
     wall = time.perf_counter() - t_loop
     return {k: round(v, 3) for k, v in rows.items()}, round(wall, 3)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+def measure(spark, qs, names, sf_dir, runs=1, gate=None) -> dict:
+    """Time ``names`` (every catalog entry when empty) ``runs`` times at
+    ``sf_dir``, then print and persist the map (module docstring)."""
+    tier = "named" if names else "full"
+    names = list(names) or list(qs)
+    per_run = [
+        timed_loop(spark, qs, names, sf_dir, r if tier == "named" else None)[0]
+        for r in range(runs)
+    ]
+    # memo rows exist only in the run that built them
+    timings = {
+        k: min(rows.get(k, v) for rows in per_run)
+        for k, v in per_run[0].items()
+    }
+    total = round(sum(timings.values()), 3)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    gate = dict(gate or {}, steal_pct_at_end=_steal_pct())
+    full = {
+        "metric": "suite_seconds_full_map",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "n_queries": len(names),
+        "tier": tier,
+        "sf": sf,
+        "load_gate": gate,
+    }
+    # The full map goes out EARLY and to a file: a map on the last line
+    # once overflowed a log tail-capture buffer. A full run also keeps a
+    # per-core-count copy, so a run on another host cannot clobber that
+    # host's map; a named run never replaces the record of a full run.
+    print(json.dumps(full))
+    cpus = cpu_count()
+    files = (
+        ["bench_named_latest.json"]
+        if tier == "named"
+        else ["bench_full_latest.json", f"bench_full_c{cpus}.json"]
+    )
+    try:
+        for fname in files:
+            with open(os.path.join(HERE, fname), "w") as f:
+                json.dump(full, f, indent=1, sort_keys=True)
+    except OSError:
+        pass  # read-only checkout: the stdout copy above still has it
+
+    top10 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+    print(
+        json.dumps(
+            {
+                "metric": "suite_seconds",
+                "value": total,
+                "unit": "sec",
+                "queries": {k: round(v, 2) for k, v in top10.items()},
+                "n_queries": len(names),
+                "tier": tier,
+                "full_map": files[-1],
+                "sf": sf,
+                "load_gate": gate,
+            }
+        )
+    )
+    return full
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Time catalog entries through the noop sink."
+    )
+    ap.add_argument(
+        "names", nargs="*", metavar="NAME",
+        help="entries to time (default: the whole catalog)",
+    )
+    ap.add_argument(
+        "--runs", type=int, default=1,
+        help="timed runs per entry; each row is the MIN (default 1)",
+    )
+    args = ap.parse_args()
+    qs = catalog.queries()
+    unknown = [n for n in args.names if n not in qs]
+    if unknown or args.runs < 1:
+        ap.error(f"unknown entries {unknown}" if unknown else "--runs < 1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    warm = warm_dir(sf_dir)
+    for d in filter(None, (sf_dir, warm)):
+        if not os.path.isdir(d):
+            raise SystemExit(f"bench.py: no slice at {d}")
     gate = _load_gate()
     # Heap sized to the measured working set: an unsized 90g
     # max heap let G1 grow/shrink committed memory all run (74.5 CPU-s
@@ -176,72 +309,19 @@ def main() -> None:
         or default_heap(sf_dir),
     )
 
-    qs = catalog.queries()
-    names = list(qs)
-
-    # Steady-state warmup (JMH-style): run the whole suite once at the
+    # Steady-state warmup (JMH-style): run the timed entries once at the
     # smallest SF so every expression/codegen/shuffle path is JIT'd, then
     # time at the target SF. Cold-JVM first-touch costs (~1.5 s/query
     # measured) are session amortization, not operator throughput. The
     # warmup's memo entries are released after it: the timed loop builds
     # (and times) its own at the target SF.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm_dir = sf_dir.replace("sf0.1", "sf0.001")
-    if warm_dir != sf_dir and os.path.isdir(warm_dir):
-        for name in names:
-            _noop(qs[name](spark, warm_dir))
-        memo.drop(spark, warm_dir)
+    if warm:
+        for name in args.names or qs:
+            _noop(qs[name](spark, warm))
+        memo.drop(spark, warm)
 
-    timings, total = timed_loop(spark, qs, names, sf_dir)
-
-    # Full per-query map: emitted EARLY (not last) and persisted next to
-    # this script — BENCH_r07 came back `"parsed": null` because the
-    # 103-entry map on the final line overflowed the driver's
-    # tail-capture buffer, so the tail started mid-line (r7 verdict
-    # ask #2). The LAST line below is bounded (top-10 slowest only) and
-    # always fits.
-    gate["steal_pct_at_end"] = _steal_pct()
-    full = {
-        "metric": "suite_seconds_full_map",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "n_queries": len(names),
-        "tier": "full",
-        "sf": sf,
-        "load_gate": gate,
-    }
-    print(json.dumps(full))
-    cpus = cpu_count()
-    try:
-        # Every run also persists a per-core-count copy
-        # (bench_full_c{cpus}.json), so a low-core scaling run cannot
-        # clobber another host's adjudication map.
-        here = os.path.dirname(os.path.abspath(__file__))
-        for fname in ("bench_full_latest.json", f"bench_full_c{cpus}.json"):
-            with open(os.path.join(here, fname), "w") as f:
-                json.dump(full, f, indent=1, sort_keys=True)
-    except OSError:
-        pass  # read-only checkout: the stdout copy above still has it
-
-    top10 = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "suite_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": {k: round(v, 2) for k, v in top10.items()},
-                "n_queries": len(names),
-                "tier": "full",
-                "full_map": f"bench_full_c{cpus}.json",
-                "sf": sf,
-                "load_gate": gate,
-            }
-        )
-    )
+    measure(spark, qs, args.names, sf_dir, args.runs, gate)
 
 
 if __name__ == "__main__":

@@ -36,7 +36,9 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# The testdata home; bench.py reads $SPARK_GRAFT_SF_DIR over it and warms
+# up at the sf0.001 slice beside it.
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 def cpu_count() -> int:
@@ -102,25 +104,6 @@ def get_spark(
             "org.apache.hadoop.fs.local.RawLocalFs",
         )
     )
-    if os.environ.get("SPARK_GRAFT_PYDAEMON", "1") != "0":
-        # Fork workers from a daemon that PRE-IMPORTS pandas/pyarrow —
-        # see pydaemon.py: the JVM SIGKILLs (never pools) any Python
-        # worker whose task output was not fully drained, so a long
-        # session's worker pool decays and wide Arrow stages pay a
-        # concurrent import storm per fresh worker (measured r18:
-        # 7.9 s vs 0.8 s for the first 32-task mapInPandas after ~120
-        # JVM-only entries). The repo root rides PYTHONPATH so the
-        # daemon module resolves inside the forked daemon process.
-        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        pp = os.environ.get("PYTHONPATH", "")
-        if here not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                f"{here}{os.pathsep}{pp}" if pp else here
-            )
-        builder = builder.config(
-            "spark.python.daemon.module",
-            "lenses_topology_example_spark.pydaemon",
-        )
     conf = dict(extra_conf or {})
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)

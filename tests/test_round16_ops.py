@@ -2,7 +2,8 @@
 tooling and the directory-table oracle path.
 
 The slice-tool tests need no SparkSession — the Spark side of each
-axis is measured by tools/scale_bench.py and parity-proved by
+axis is measured by `bench.py NAME ...` on the slice against sf0.1
+(`tools/bench_compare.py A B --step-factor N`) and parity-proved by
 driver_sim on the slice (SCALING.md round-16); they pin the
 pure-Python contracts the measurement rests on at pyarrow/DuckDB
 cost. The loader-memo test rides the shared session fixture.

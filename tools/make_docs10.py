@@ -23,9 +23,9 @@ TPC-H scaler reads doc-tier inputs).
 DELIBERATE SEMANTICS: text is replicated verbatim, so every document
 gains 9 exact duplicates — the realistic shape of a crawl at scale
 (boilerplate and mirror pages). Near-dup PAIR outputs therefore grow
-~O(copies^2) BY SEMANTICS (bigger answer, not worse plan); the
-scale_bench adjudication must separate output-driven growth from
-plan-driven growth for the pair-emitting entries. The df-capped /
+~O(copies^2) BY SEMANTICS (bigger answer, not worse plan); a
+`bench_compare A B --step-factor N` flag on a pair-emitting entry
+must separate output-driven growth from plan-driven growth. The df-capped /
 cluster-collapsed production paths are exactly the forms built to
 survive this.
 

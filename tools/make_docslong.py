@@ -17,8 +17,9 @@ Replication: text -> repeat(text || ' ', copies) per doc (joined with
 a space so token boundaries survive the seam), doc_id/source/lang/
 score kept verbatim, all other tables copied unscaled. Same row
 count, ~100x bytes. Like events100 this is a SCALING-measurement
-slice (tools/scale_bench.py --big ... --scaled-tables documents), not
-an oracle-parity slice — both engines would agree, but derived values
+slice (`SPARK_GRAFT_SF_DIR=<outdir> python bench.py NAME ...`, then
+`tools/bench_compare.py` against the sf0.1 map), not an oracle-parity
+slice — both engines would agree, but derived values
 (tf weights, fingerprints) obviously differ from sf0.1 and the
 interesting output is the wall-clock ratio.
 

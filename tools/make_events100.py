@@ -21,8 +21,9 @@ instead of 100-way timestamp ties), value/event_type/props verbatim.
 Events span ~30 days, so a <=99 s jitter is sub-session-gap noise.
 All other tables are copied unscaled.
 
-This slice is for SCALING MEASUREMENT (tools/scale_bench.py --big ...
---scaled-tables events), not oracle parity: the jitter changes derived
+This slice is for SCALING MEASUREMENT (`SPARK_GRAFT_SF_DIR=<outdir>
+python bench.py NAME ...`, then `tools/bench_compare.py` against the
+sf0.1 map), not oracle parity: the jitter changes derived
 values, and both engines would still agree, but the interesting output
 is the wall-clock ratio.
 
